@@ -72,6 +72,10 @@ VALID_SORT_OPTS = {
 #: mini_hadoop.ex:18-32); pass the FileStore via run_job(store=...)
 STORE_SCHEME = "store://"
 
+#: Python scalar type name -> the SQL type createDataFrame's inference
+#: gives it (pyspark.sql.types._type_mappings)
+_PROBED_SQL_TYPES = {"str": "string", "int": "bigint", "float": "double", "bool": "boolean"}
+
 _ALLOWED_KEYS = (
     "job_name",
     "input_files",
@@ -362,23 +366,33 @@ def run_job(
     # visibly wrong for non-deterministic or side-effecting reducers)
     reduced = reduced.persist()
 
-    # ONE action (replacing a bare isEmpty) answers two questions: is the
-    # result empty, and are the pair types homogeneous?  The latter
-    # matters because a reducer may legally return different value types
-    # per key (the reference JSON-encodes ANY value, job_runner.ex:
-    # 242-270) — and sampled schema inference doesn't fail on such an
-    # RDD, it silently NULLS the rows that don't match the sampled type.
-    # Heterogeneously-typed keys/values are stringified instead (None
-    # stays null); homogeneous jobs keep their real types.  Same-named
-    # containers with differing element types (e.g. list[int]/list[str])
-    # still fall to inference — documented limitation.
-    type_pairs = reduced.map(
-        lambda kv: (type(kv[0]).__name__, type(kv[1]).__name__)
-    ).distinct().collect()
+    # ONE action (replacing a bare isEmpty) answers three questions: is
+    # the result empty, are the pair types homogeneous, and which schema
+    # do they give?  Homogeneity matters because a reducer may legally
+    # return different value types per key (the reference JSON-encodes
+    # ANY value, job_runner.ex:242-270) — and sampled schema inference
+    # doesn't fail on such an RDD, it silently NULLS the rows that don't
+    # match the sampled type.  Heterogeneously-typed keys/values are
+    # stringified instead (None stays null); homogeneous jobs keep their
+    # real types.  Same-named containers with differing element types
+    # (e.g. list[int]/list[str]) still fall to inference — documented
+    # limitation.  Each partition reports its own type-name set, so the
+    # probe is a map-side pass with no shuffle stage of its own.
+    type_pairs = set().union(
+        *reduced.mapPartitions(
+            lambda kvs: [{(type(k).__name__, type(v).__name__) for k, v in kvs}]
+        ).collect()
+    )
 
     def _homogeneous(names: set[str]) -> bool:
         base = names - {"NoneType"}
         return len(base) <= 1 or base <= {"int", "float"}
+
+    def _scalar_type(names: set[str]) -> str | None:
+        # the SQL type inference would pick, when the probe has already
+        # seen it to be the side's only non-None type
+        base = names - {"NoneType"}
+        return _PROBED_SQL_TYPES.get(base.pop()) if len(base) == 1 else None
 
     if not type_pairs:
         # empty input -> empty result typed (string, string) — a FIXED
@@ -387,16 +401,25 @@ def run_job(
         # casts (the reference likewise emits an empty output file)
         pairs_df = spark.createDataFrame([], "key string, value string")
     else:
-        key_ok = _homogeneous({k for k, _ in type_pairs})
-        val_ok = _homogeneous({v for _, v in type_pairs})
-        if not (key_ok and val_ok):
-            reduced = reduced.map(
-                lambda kv: (
-                    kv[0] if key_ok else str(kv[0]),
-                    kv[1] if val_ok else (None if kv[1] is None else str(kv[1])),
-                )
+        key_names = {k for k, _ in type_pairs}
+        val_names = {v for _, v in type_pairs}
+        key_t, val_t = _scalar_type(key_names), _scalar_type(val_names)
+        if key_t and val_t:
+            # the schema inference would derive, without its first() job;
+            # rows convert exactly as on the inferred path (no verify)
+            pairs_df = spark.createDataFrame(
+                reduced, f"key {key_t}, value {val_t}", verifySchema=False
             )
-        pairs_df = spark.createDataFrame(reduced, ["key", "value"])
+        else:
+            key_ok, val_ok = _homogeneous(key_names), _homogeneous(val_names)
+            if not (key_ok and val_ok):
+                reduced = reduced.map(
+                    lambda kv: (
+                        kv[0] if key_ok else str(kv[0]),
+                        kv[1] if val_ok else (None if kv[1] is None else str(kv[1])),
+                    )
+                )
+            pairs_df = spark.createDataFrame(reduced, ["key", "value"])
 
     if spec.sort_result_opt is not None:
         # distributed sort at the DataFrame layer with the SAME tiebreak

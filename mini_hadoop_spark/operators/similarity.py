@@ -1520,6 +1520,27 @@ def _matryoshka_pick(v: DataFrame) -> DataFrame:
     )
 
 
+def _arrow_matrix(vectors, d: int):
+    """An Arrow list<double> column as an (n, d) float64 matrix.  Every
+    row must be a non-null list of exactly ``d`` non-null values: the
+    flat reshape would otherwise misalign rows silently whenever the
+    lengths happen to sum to n*d."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    n = len(vectors)
+    bad = np.flatnonzero(pc.list_value_length(vectors).fill_null(-1).to_numpy() != d)
+    if len(bad):
+        raise ValueError(
+            f"embedding vectors must be non-null with {d} dims each; "
+            f"{len(bad)} of {n} rows are not (first at batch row {bad[0]})"
+        )
+    flat = vectors.flatten()
+    if flat.null_count:
+        raise ValueError(f"embedding vectors hold {flat.null_count} null elements")
+    return flat.to_numpy(zero_copy_only=False).reshape(n, d)
+
+
 def similarity_matryoshka_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka-truncation audit (Kusupati et al. 2022, MRL): can the
     first k dimensions stand in for the full embedding?  Per truncation
@@ -1614,12 +1635,7 @@ def similarity_matryoshka_agreement(spark: SparkSession, sf_dir: str) -> DataFra
             ids = batch.column(batch.schema.get_field_index("vec_id")).to_numpy(
                 zero_copy_only=False
             )
-            E = (
-                batch.column(batch.schema.get_field_index("e"))
-                .flatten()
-                .to_numpy(zero_copy_only=False)
-                .reshape(n, d)
-            )
+            E = _arrow_matrix(batch.column(batch.schema.get_field_index("e")), d)
             nacc = np.zeros(n)
             dacc = np.zeros((n, m))
             nsq = {}

@@ -1,4 +1,8 @@
-"""SparkSession bootstrap tuned for the local[32] harness.
+"""SparkSession bootstrap sized from the host it runs on.
+
+Local parallelism defaults to the host's core count and the driver heap
+(which in local mode is also the executors' heap) to a fixed share of
+physical RAM, so the same code runs on a 4-core laptop and a 32-core box.
 
 At 100 TB / 1000 executors the same settings translate to: AQE on (runtime
 coalesce + skew-join), shuffle partitions sized to cluster cores, UTC
@@ -11,16 +15,32 @@ import os
 
 from pyspark.sql import SparkSession
 
+#: default driver heap as a share of physical RAM: the rest is left to the
+#: JVM's off-heap use, the Python workers and the OS page cache
+DRIVER_MEMORY_SHARE = 0.55
+
+
+def physical_memory_bytes() -> int:
+    return os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+def default_driver_memory() -> str:
+    """``spark.driver.memory`` default: DRIVER_MEMORY_SHARE of physical
+    RAM, in whole MiB."""
+    return f"{int(physical_memory_bytes() * DRIVER_MEMORY_SHARE) // (1024 * 1024)}m"
+
 
 def get_spark(app_name: str = "mini_hadoop_spark", cpus: int | None = None) -> SparkSession:
     """Create (or reuse) a SparkSession.
 
-    ``SPARK_GRAFT_CPUS`` controls local parallelism (default 32).  Shuffle
-    partitions match core count — the right setting for local mode; on a
-    real cluster this would be ~2-3x total cores and AQE coalesces down.
+    ``SPARK_GRAFT_CPUS`` controls local parallelism (default: the host's
+    core count) and ``SPARK_DRIVER_MEMORY`` the driver heap (default:
+    ``default_driver_memory()``).  Shuffle partitions match core count —
+    the right setting for local mode; on a real cluster this would be
+    ~2-3x total cores and AQE coalesces down.
     """
     if cpus is None:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -30,7 +50,7 @@ def get_spark(app_name: str = "mini_hadoop_spark", cpus: int | None = None) -> S
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Whole-stage-codegen compiled-class cache (default 100 entries).
@@ -44,7 +64,7 @@ def get_spark(app_name: str = "mini_hadoop_spark", cpus: int | None = None) -> S
         # the right size tracks the number of distinct plans the
         # application runs, not the data volume — any multi-query job
         # server wants the same setting.  ~Tens of KB per entry; a few
-        # hundred MB ceiling in a 48 GB driver.
+        # hundred MB ceiling.
         .config("spark.sql.codegen.cache.maxEntries", "5000")
         # nanosAsLong is NOT set here: the catalog probes each file's
         # actual timestamp encoding and flips the conf only when a nanos

@@ -91,6 +91,18 @@ def _newline_ranges(local_path: str, block_size: int) -> list[tuple[int, int, in
     return ranges
 
 
+def _written_rows(path: str) -> int:
+    """Rows in a parquet directory written by Spark, from its part
+    files' footers (no data pages are read)."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.read_metadata(os.path.join(path, f)).num_rows
+        for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    )
+
+
 class FileStore:
     """Named file catalog rooted at a warehouse directory."""
 
@@ -241,10 +253,11 @@ class FileStore:
             blocks = range_df.mapInPandas(read_ranges, BLOCK_SCHEMA)
             blocks.write.parquet(self._path(filename))
 
-            # Count what was WRITTEN (metadata-only scan), not the source
-            # lineage — re-reading the local file could disagree if it
-            # was appended to meanwhile.
-            n_blocks = self.spark.read.parquet(self._path(filename)).count()
+            # Count what was WRITTEN, not the source lineage — re-reading
+            # the local file could disagree if it was appended to
+            # meanwhile.  The row counts sit in the part files' footers,
+            # so summing them on the driver costs no Spark job.
+            n_blocks = _written_rows(self._path(filename))
             self._op_update(
                 op_id,
                 state="completed",

@@ -24,13 +24,32 @@ iteration count (the classic iterative-Spark pitfall).  Pass
 blocks on executors only and is lost on executor death — routine at 1000
 executors — while ``checkpoint()`` writes to the fault-tolerant checkpoint
 dir at the cost of an extra write.
+
+Rounding assumption: ``pagerank`` pins both per-iteration joins to
+sort-merge (the ``SHUFFLE_MERGE`` hints).  That changes the order in
+which each page's double contributions are summed, so ranks can drift in
+the last few bits against a broadcast plan or another engine.  The
+reference-parity queries round ranks to 8 decimals, which absorbs that
+drift; output consumed at full double precision would need a fixed
+summation order instead.  ``pagerank_fixed_point`` has no such
+assumption: its ranks are integers, summed exactly in any order.
+
+Convergence test of ``pagerank_fixed_point``: each iteration's
+``sum(|rank9 - p9|)`` and page count are observed metrics
+(``DataFrame.observe``) on the frame the iteration localCheckpoints, so
+the eager checkpoint's own job computes them and the test costs no job
+of its own.  The observe node must be the TOP node of the checkpointed
+plan: it then runs in the job's result stage, whose accumulator updates
+Spark applies once per partition, so a retried task cannot count its
+rows twice (an observe below a shuffle would run in a map stage, where
+a re-run stage reports its partitions again).
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.storagelevel import StorageLevel
 
 
@@ -243,16 +262,22 @@ def pagerank_fixed_point(
     0.05 mean units converges this family of graphs in ~8.
 
     Scale posture: same as ``pagerank`` — per iteration one keyed join
-    + one hash aggregate; the (edge ⋈ out-degree) fact is materialized
-    once before the loop; each frontier localCheckpoints (truncated
-    lineage) and the convergence test is a single scalar aggregate per
-    iteration.  Returns ``((page, rank9), stop_iteration)``.
+    + one hash aggregate; the out-degree table and the (edge ⋈
+    out-degree) fact are materialized once before the loop; each
+    frontier localCheckpoints (truncated lineage) and the convergence
+    test is observed on that checkpoint's job (module docstring).
+    Returns ``((page, rank9), stop_iteration)``.
     """
-    out_deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
+    # The edge scan is read twice, both times before the loop: the
+    # out-degree table and the (edge ⋈ out-degree) fact are
+    # checkpointed, and the page count and the per-iteration teleport
+    # rows derive from those checkpoints, so no iteration re-scans or
+    # re-aggregates the edge source.
+    out_deg = edges.groupBy("src").agg(F.count("*").alias("deg")).localCheckpoint(eager=True)
     ej = edges.join(out_deg, "src").localCheckpoint(eager=True)
     n_pages = (
-        edges.select(F.col("src").alias("p"))
-        .union(edges.select(F.col("dst").alias("p")))
+        out_deg.select(F.col("src").alias("p"))
+        .union(ej.select(F.col("dst").alias("p")))
         .distinct()
         .count()
     )
@@ -267,7 +292,7 @@ def pagerank_fixed_point(
     t9 = int(math.floor((1.0 - damping) / n_pages * 1e9 + 0.5))
     teleport = out_deg.select(F.col("src").alias("page"), F.lit(t9).cast("long").alias("c9"))
 
-    def step(prev: DataFrame | None) -> DataFrame:
+    def step(prev: DataFrame | None) -> tuple[DataFrame, Observation | None]:
         if prev is None:
             src_rank = F.lit(1_000_000_000)
             joined = ej
@@ -281,23 +306,28 @@ def pagerank_fixed_point(
             F.floor(F.lit(damping) * src_rank / F.col("deg") + F.lit(0.5)).alias("c9"),
         )
         agg = contribs.unionAll(teleport).groupBy("page").agg(F.sum("c9").alias("rank9"))
+        delta = None
         if prev is not None:
             # attach the previous rank BEFORE the checkpoint: both sides
             # are hash-partitioned on page (groupBy output / checkpointed
-            # groupBy output), so the join adds no shuffle, and the
-            # convergence test below becomes a scan of the checkpointed
-            # frame instead of a second shuffle join per iteration (the
-            # page set is identical every round — pages = dst ∪ src of
-            # the same edge set — so this left join never adds nulls)
+            # groupBy output), so the join adds no shuffle (the page set
+            # is identical every round — pages = dst ∪ src of the same
+            # edge set — so this left join never adds nulls).  The
+            # convergence sums are observed metrics of the checkpoint's
+            # own job (see the module docstring), not a job of their own.
             agg = agg.join(prev.select("page", F.col("rank9").alias("p9")), "page", "left")
-        return agg.localCheckpoint(eager=True)
+            delta = Observation()
+            agg = agg.observe(
+                delta,
+                F.sum(F.abs(F.col("rank9") - F.col("p9"))).alias("s"),
+                F.count("*").alias("c"),
+            )
+        return agg.localCheckpoint(eager=True), delta
 
-    prev = step(None)
+    prev, _ = step(None)
     for k in range(2, max_iters + 1):
-        cur = step(prev)
-        d = cur.agg(
-            F.sum(F.abs(F.col("rank9") - F.col("p9"))).alias("s"), F.count("*").alias("c")
-        ).first()
+        cur, delta = step(prev)
+        d = delta.get
         prev = cur
         if d["s"] < tol9 * d["c"]:
             return cur.select("page", "rank9"), k

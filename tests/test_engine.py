@@ -449,6 +449,25 @@ def test_pagerank_converged_iteration_count_pinned(spark):
     assert sum(drift) / len(drift) < 50_000_000
 
 
+def test_pagerank_fixed_point_one_page(spark):
+    """A one-page graph (a self-loop) keeps all rank on its page:
+    teleport 0.15 + the loop's 0.85, unchanged from round 1, so the
+    loop stops at the first convergence test."""
+    from mini_hadoop_spark.workloads.pagerank import pagerank_fixed_point
+
+    ranks, k = pagerank_fixed_point(spark.createDataFrame([(1, 1)], "src long, dst long"))
+    assert [tuple(r) for r in ranks.collect()] == [(1, 1_000_000_000)]
+    assert k == 2
+
+
+def test_pagerank_fixed_point_empty_graph(spark):
+    from mini_hadoop_spark.workloads.pagerank import pagerank_fixed_point
+
+    ranks, k = pagerank_fixed_point(spark.createDataFrame([], "src long, dst long"))
+    assert ranks.collect() == [] and k == 0
+    assert ranks.schema.simpleString() == "struct<page:bigint,rank9:bigint>"
+
+
 def test_run_job_empty_input(spark, tmp_path):
     """Empty input must yield an empty result, not a schema-inference
     crash (found by an empty-file probe)."""
@@ -458,6 +477,72 @@ def test_run_job_empty_input(spark, tmp_path):
     p.write_text("")
     result = word_count_submit_job(spark, [str(p)], sort_desc_by_count=False)
     assert result.collect_pairs() == []
+
+
+def _run_typed_job(spark, tmp_path, text, mapper, reducer):
+    p = tmp_path / "typed.txt"
+    p.write_text(text)
+    spec = JobSpec.create(
+        job_name="typed", input_files=[str(p)], map_function=mapper, reduce_function=reducer
+    )
+    pairs = run_job(spark, spec).pairs
+    return pairs.schema.simpleString(), sorted(tuple(r) for r in pairs.collect())
+
+
+def test_run_job_bool_values_typed_boolean(spark, tmp_path):
+    """One non-None value type -> the schema comes from the type probe;
+    bool stays BOOLEAN (not its int superclass)."""
+    got = _run_typed_job(
+        spark, tmp_path, "a b b c c c\n",
+        lambda block, ctx: [(w, 1) for w in block.split()],
+        lambda k, vs, ctx: len(vs) % 2 == 1,
+    )
+    assert got == (
+        "struct<key:string,value:boolean>",
+        [("a", True), ("b", False), ("c", True)],
+    )
+
+
+def test_run_job_none_bearing_int_values(spark, tmp_path):
+    """int values with Nones type as BIGINT with the Nones kept null,
+    whichever row comes first."""
+    got = _run_typed_job(
+        spark, tmp_path, "0 1 1 2 2 2 3\n",
+        lambda block, ctx: [(int(w), 1) for w in block.split()],
+        lambda k, vs, ctx: None if k % 2 == 0 else len(vs),
+    )
+    assert got == (
+        "struct<key:bigint,value:bigint>",
+        [(0, None), (1, 2), (2, None), (3, 1)],
+    )
+
+
+def test_run_job_int_float_mix_keeps_inference(spark, tmp_path):
+    """An int+float value mix is not one probed type: the schema is
+    still inferred from the first row, so the sampled type wins and the
+    other type's values come back null (the documented sampling
+    behaviour the type probe does not change).  Integer keys hash to
+    themselves, so key 0 lands in the first reduce partition and its
+    row is the one inference samples."""
+    got = _run_typed_job(
+        spark, tmp_path, "0 1\n",
+        lambda block, ctx: [(int(w), 1) for w in block.split()],
+        lambda k, vs, ctx: 7 if k == 0 else 2.5,
+    )
+    assert got == ("struct<key:bigint,value:bigint>", [(0, 7), (1, None)])
+
+
+def test_run_job_list_values_fall_back_to_inference(spark, tmp_path):
+    """Container values are not probed scalars: inference types them."""
+    got = _run_typed_job(
+        spark, tmp_path, "a b b\n",
+        lambda block, ctx: [(w, 1) for w in block.split()],
+        lambda k, vs, ctx: [len(vs), 0],
+    )
+    assert got == (
+        "struct<key:string,value:array<bigint>>",
+        [("a", [1, 0]), ("b", [2, 0])],
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -663,6 +748,24 @@ def test_filestore_empty_file(spark, tmp_path):
     assert store.retrieve_file("e", str(dest)) == 0
     assert dest.read_bytes() == b""
     assert store.file_info("e")["n_lines"] == 0
+
+
+def test_filestore_block_count_over_part_files(spark, tmp_path):
+    """store_file's block count is read from the written part files'
+    footers: it must equal the rows Spark reads back, summed over every
+    part file of a multi-block, multi-part binary store."""
+    from mini_hadoop_spark.sources.dfs import FileStore
+
+    store = FileStore(spark, str(tmp_path / "warehouse"))
+    src = tmp_path / "multi.bin"
+    content = bytes(range(256)) * 41  # 10,496 bytes: 21 blocks, last partial
+    src.write_bytes(content)
+
+    n_blocks = store.store_file("multi", str(src), block_size=500)
+    path = tmp_path / "warehouse" / "multi"
+    assert len([f for f in os.listdir(path) if f.endswith(".parquet")]) > 1
+    assert n_blocks == 21 == spark.read.parquet(str(path)).count()
+    assert store.file_info("multi")["n_blocks"] == n_blocks
 
 
 def test_filestore_async_progress(spark, tmp_path):

@@ -679,6 +679,24 @@ def test_cluster_kmeans_topics_contract(spark):
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
 
+def test_matryoshka_kernel_rejects_ragged_and_null_vectors():
+    """The scoring kernel's flat reshape must not misalign rows: here the
+    lengths 3 + 1 sum to 2 x 2, which a bare reshape(2, 2) accepts."""
+    import pyarrow as pa
+
+    from mini_hadoop_spark.operators.similarity import _arrow_matrix
+
+    assert _arrow_matrix(pa.array([[1.0, 2.0], [3.0, 4.0]]), 2).tolist() == [
+        [1.0, 2.0], [3.0, 4.0]
+    ]
+    with pytest.raises(ValueError, match="2 dims each; 2 of 2 rows"):
+        _arrow_matrix(pa.array([[1.0, 2.0, 3.0], [4.0]]), 2)
+    with pytest.raises(ValueError, match="1 of 2 rows"):
+        _arrow_matrix(pa.array([[1.0, 2.0], None]), 2)
+    with pytest.raises(ValueError, match="1 null elements"):
+        _arrow_matrix(pa.array([[1.0, None], [3.0, 4.0]]), 2)
+
+
 def test_matryoshka_agreement_go_no_go_semantics(spark):
     """Pin the audit's decision semantics under the md5-budget sample:
     the report must still answer "can prefix k stand in for the full

@@ -621,3 +621,12 @@ def test_per_group_topk_plans_window_group_limit(spark, name):
         f"WindowGroupLimit — each low-cardinality group becomes one "
         f"corpus-sized task:\n{plan[:2000]}"
     )
+
+
+def test_plan_audit_counts_arrow_map_kernels(spark):
+    """tools/plan_audit.py counts a mapInArrow kernel (the matryoshka
+    scorer's node) among the Arrow-batched Python nodes."""
+    from tools.plan_audit import plan_stats
+
+    df = spark.range(4).mapInArrow(lambda batches: batches, "id long")
+    assert plan_stats(df)["python_arrow"] == 1

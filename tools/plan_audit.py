@@ -37,7 +37,9 @@ def plan_stats(df) -> dict:
         # "[codegen id : N]"; distinct ids = spans (requires AQE OFF in
         # the audit session — the AQE initial plan carries no codegen ids)
         "codegen_spans": len(set(re.findall(r"\[codegen id : (\d+)\]", plan))),
+        # "MapInArrow" also matches the PythonMapInArrow node name
         "python_arrow": tree.count("MapInPandas")
+        + tree.count("MapInArrow")
         + tree.count("FlatMapGroupsInPandas")
         + tree.count("ArrowEvalPython"),
         "python_rowwise": tree.count("BatchEvalPython"),
