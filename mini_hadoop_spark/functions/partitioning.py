@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, functions as F
 
 #: id(input df) → (input df, spread df).  The probe below costs ~30 ms of
 #: physical planning per call; table frames are themselves memoized per
-#: session (sources/catalog._df_memo), so repeated queries pass the SAME
+#: session (sources/catalog.load_table), so repeated queries pass the SAME
 #: object and hit this cache.  The strong reference to the input keeps
 #: its id() from being reused by a successor object.
 _spread_memo: dict[int, tuple[DataFrame, DataFrame]] = {}

@@ -91,9 +91,6 @@ run-job-then-feed-results-back loop shape.
 
 from __future__ import annotations
 
-import os
-import threading
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mini_hadoop_spark.functions.partitioning import spread_small_scan
@@ -108,6 +105,7 @@ from mini_hadoop_spark.operators.text_scoring import (
     QUALITY_GOPHER_SQL,
     quality_gopher_rules,
 )
+from mini_hadoop_spark.session import build_once
 from mini_hadoop_spark.sources.catalog import load_table
 
 #: hashed-feature dimensionality (the hashing-trick width).  64 keeps
@@ -119,52 +117,6 @@ CLS_BUCKETS = 64
 #: on this teacher (measured; see module docstring).
 CLS_EPOCHS = 3
 CLS_BATCHES = 16
-
-_train_memo: dict[tuple, tuple] = {}
-_doc_table_memo: dict[tuple, DataFrame] = {}
-#: serializes _doc_table's populate so concurrent callers share ONE
-#: build (double-checked memo).  The r14 id-attribution rationale is
-#: gone: _local_checkpoint_tracked now reads the checkpoint RDD id
-#: straight off the LogicalRDD plan (ADVICE r15), so concurrent
-#: checkpoints elsewhere can no longer be misattributed.
-_doc_table_lock = threading.Lock()
-#: checkpoint RDD ids per memo key — Dataset.unpersist() does NOT free a
-#: localCheckpoint's blocks (it only drops CacheManager entries; verified
-#: empirically), so clear_memo unpersists the underlying RDDs by id
-_doc_table_rdd_ids: dict[tuple, list[int]] = {}
-
-
-def _persistent_rdd_ids(spark: SparkSession) -> list[int]:
-    """Ids of all currently persisted RDDs (JVM-side registry)."""
-    it = spark.sparkContext._jsc.sc().getPersistentRDDs().keysIterator()
-    ids = []
-    while it.hasNext():
-        ids.append(int(it.next()))
-    return ids
-
-
-def _local_checkpoint_tracked(spark: SparkSession, df: DataFrame) -> tuple:
-    """localCheckpoint(eager=True) + the ids of the checkpoint RDD(s) it
-    registered, so the blocks can be freed deterministically later.
-
-    Attribution is EXACT (ADVICE r15): the checkpointed Dataset's
-    analyzed plan is a LogicalRDD wrapping precisely the RDD that
-    ``localCheckpoint`` persisted, so its id is read straight off the
-    plan — no registry diff, hence no misattribution window when any
-    OTHER thread checkpoints concurrently (bench's concurrent build
-    groups).  The registry-diff fallback only covers a hypothetical
-    Spark version whose checkpoint plan isn't a LogicalRDD."""
-    before = set(_persistent_rdd_ids(spark))
-    out = df.localCheckpoint(eager=True)
-    try:
-        ana = out._jdf.queryExecution().analyzed()
-        if ana.getClass().getSimpleName() == "LogicalRDD":
-            return out, [int(ana.rdd().id())]
-    except Exception:
-        pass
-    new_ids = [i for i in _persistent_rdd_ids(spark) if i not in before]
-    return out, new_ids
-
 
 def _md5_mod(col, modulus: int) -> F.Column:
     """First 8 md5 hex chars → long → mod ``modulus`` — the ONE
@@ -222,25 +174,18 @@ def _doc_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal map expression).  n rows, ≤ CLS_BUCKETS array elements.
     Memoized + checkpointed per (session, corpus): training takes ~50
     passes over it and the eval query one more — one feature build
-    serves them all.  The populate is double-checked-locked: bench's
-    iterative_models group calls this from concurrent driver threads,
-    and the lock makes them share one build instead of each running the
-    feature pipeline.  (Checkpoint-id attribution no longer needs the
-    lock — _local_checkpoint_tracked reads the id off the LogicalRDD
-    plan directly, ADVICE r15.)"""
-    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir))
-    if key in _doc_table_memo:
-        return _doc_table_memo[key]
-    with _doc_table_lock:
-        if key in _doc_table_memo:  # lost the build race — reuse the winner's
-            return _doc_table_memo[key]
+    serves them all.  bench's iterative_models group calls this from
+    concurrent driver threads; build_once makes them share one build
+    instead of each running the feature pipeline."""
+
+    def build() -> DataFrame:
         raw = spread_small_scan(load_table(spark, sf_dir, "documents"))
         feats = _doc_buckets(raw)
         # content-hash split (sampling.split_label — the SAME 80/10/10
         # md5(text) rule the split operators register), so the holdout
         # family trains/evaluates on engine-exact split membership
         splits = raw.select("doc_id", split_label(F.col("text")).alias("split"))
-        built = (
+        return (
             _labels(spark, sf_dir)
             .join(feats, "doc_id", "left")
             .join(splits, "doc_id")
@@ -252,11 +197,10 @@ def _doc_table(spark: SparkSession, sf_dir: str) -> DataFrame:
             # pure scheduler overhead otherwise).  At cluster scale the
             # knob is the same — size the checkpoint to per-step volume.
             .coalesce(8)
+            .localCheckpoint(eager=True)
         )
-        _doc_table_memo[key], _doc_table_rdd_ids[key] = _local_checkpoint_tracked(
-            spark, built
-        )
-    return _doc_table_memo[key]
+
+    return build_once(spark, sf_dir, "cls_doc_table", build)
 
 
 def _margin_col(w: dict[int, int]):
@@ -341,10 +285,9 @@ def _run_sgd(
 def _train(spark: SparkSession, sf_dir: str) -> tuple:
     """Memoized training run over the FULL corpus (the oracled 48-step
     geometry): ([per-epoch stats], final weights dict)."""
-    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir))
-    if key not in _train_memo:
-        _train_memo[key] = _run_sgd(_doc_table(spark, sf_dir), CLS_BATCHES)
-    return _train_memo[key]
+    return build_once(
+        spark, sf_dir, "cls_train", lambda: _run_sgd(_doc_table(spark, sf_dir), CLS_BATCHES)
+    )
 
 
 def _train_holdout(spark: SparkSession, sf_dir: str) -> dict[int, int]:
@@ -353,11 +296,12 @@ def _train_holdout(spark: SparkSession, sf_dir: str) -> dict[int, int]:
     geometry and batch rule as :func:`_train` (md5(doc_id) % B over the
     train docs); skips the per-epoch stats jobs (only the final weights
     are consumed)."""
-    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir), "holdout")
-    if key not in _train_memo:
+
+    def build() -> tuple:
         docs = _doc_table(spark, sf_dir).filter(F.col("split") == "train")
-        _train_memo[key] = _run_sgd(docs, CLS_BATCHES, with_stats=False)
-    return _train_memo[key][1]
+        return _run_sgd(docs, CLS_BATCHES, with_stats=False)
+
+    return build_once(spark, sf_dir, "cls_train_holdout", build)[1]
 
 
 def classifier_train_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -443,8 +387,8 @@ def _train_prod(spark: SparkSession, sf_dir: str) -> tuple:
     production SGD shards its training data by batch/worker).  The
     staging is one linear write, reclaimed as soon as the collected
     stats/weights exist."""
-    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir), "prod")
-    if key not in _train_memo:
+
+    def build() -> tuple:
         import shutil
         import tempfile
         import time
@@ -464,8 +408,7 @@ def _train_prod(spark: SparkSession, sf_dir: str) -> tuple:
             # read-back cannot infer a schema, so skip the staging
             stats, w = _run_sgd(docs, n_batches, batch_col="pbatch")
             phases = {"count_s": t1 - t0, "stage_s": 0.0, "train_s": 0.0}
-            _train_memo[key] = (n_train, n_batches, stats, w, phases)
-            return _train_memo[key]
+            return (n_train, n_batches, stats, w, phases)
         root = tempfile.mkdtemp(prefix="cls_prod_batches_")
         try:
             docs.write.partitionBy("pbatch").mode("overwrite").parquet(root)
@@ -479,8 +422,9 @@ def _train_prod(spark: SparkSession, sf_dir: str) -> tuple:
         # that is actually training (incl. the per-epoch eval jobs), not
         # staging or the split count
         phases = {"count_s": t1 - t0, "stage_s": t2 - t1, "train_s": t3 - t2}
-        _train_memo[key] = (n_train, n_batches, stats, w, phases)
-    return _train_memo[key]
+        return (n_train, n_batches, stats, w, phases)
+
+    return build_once(spark, sf_dir, "cls_train_prod", build)
 
 
 def classifier_train_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -716,31 +660,6 @@ CLASSIFIER_SCORES_SQL = (
 SELECT doc_id, m AS margin, m > 0 AS pred_keep FROM me{CLS_EPOCHS}
 """
 )
-
-
-def clear_memo() -> None:
-    """Drop the training + doc-table memos — the same hook
-    dedup/similarity expose for harnesses that need COLD re-runs or
-    rebuild a corpus path in place within one session (the classifier
-    scale smoke calls it between corpora).  Eagerly frees each
-    memoized doc table's localCheckpoint blocks before dropping the
-    reference (ADVICE r13: without this, a cold re-run keeps the prior
-    corpus's checkpointed partitions in executor storage until GC;
-    note Dataset.unpersist() would NOT do it — it only drops
-    CacheManager entries, so the tracked checkpoint RDDs are
-    unpersisted by id)."""
-    _train_memo.clear()
-    for key, df in list(_doc_table_memo.items()):
-        try:
-            jsc = df.sparkSession.sparkContext._jsc.sc()
-            for rid in _doc_table_rdd_ids.get(key, []):
-                opt = jsc.getPersistentRDDs().get(rid)
-                if opt.isDefined():
-                    opt.get().unpersist(False)
-        except Exception:
-            pass  # a stopped session has already freed the blocks
-    _doc_table_memo.clear()
-    _doc_table_rdd_ids.clear()
 
 
 QUERIES = {

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from mini_hadoop_spark.functions.partitioning import spread_small_scan
 from mini_hadoop_spark.functions.text import round_half_up, sql_round_half_up, tokens
 from mini_hadoop_spark.functions.vectors import as_double, dot
+from mini_hadoop_spark.session import build_once
 from mini_hadoop_spark.sources.catalog import load_table
 
 BPE_TOP_MERGES = 20
@@ -119,10 +120,12 @@ def _bpe_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass emitting (rnd, left_sym, right_sym, merged, cnt,
     corpus_syms_after) — the merge table AND the sizing curve as
     projections of the same rows."""
-    key = _pq_key(spark, sf_dir, "bpe_combined")
-    if key not in _pq_memo:
-        _pq_memo[key] = _bpe_train_plan(spark, sf_dir).localCheckpoint(eager=True)
-    return _pq_memo[key]
+    return build_once(
+        spark,
+        sf_dir,
+        "bpe_combined",
+        lambda: _bpe_train_plan(spark, sf_dir).localCheckpoint(eager=True),
+    )
 
 
 #: Frequency floor on the collected BPE vocabulary (VERDICT r12 #3).
@@ -679,25 +682,17 @@ def _pq_assign(sub_df: DataFrame, codebook: DataFrame) -> DataFrame:
     )
 
 
-# (application, sf_dir) -> materialized PQ artifacts.  Like the IVF
-# quantizer/lists: the codebook and the full-corpus code assignment are
-# build-once session-scoped indexes shared by the audit query and the
-# IVF-PQ ANN query.
-_pq_memo: dict[tuple, DataFrame] = {}
-
-
-def _pq_key(spark: SparkSession, sf_dir: str, what: str) -> tuple:
-    import os
-
-    return (spark.sparkContext.applicationId, os.path.normpath(sf_dir), what)
+# Like the IVF quantizer/lists: the PQ codebook and the full-corpus code
+# assignment are build-once session-scoped indexes shared by the audit
+# query and the IVF-PQ ANN query.
 
 
 def pq_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The memoized, materialized PQ codebook (m, cid, ce): deterministic
     seeds = the first PQ_KS vectors' subvectors, one Lloyd step with the
     order-independent fixed-point mean."""
-    key = _pq_key(spark, sf_dir, "cent")
-    if key not in _pq_memo:
+
+    def build() -> DataFrame:
         emb = spread_small_scan(load_table(spark, sf_dir, "embeddings"))
         v = emb.select("vec_id", as_double("embedding").alias("e"))
         sub = pq_subvectors(v)
@@ -722,29 +717,26 @@ def pq_model(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.array_sort(F.collect_list(F.struct("pos", "mm"))).alias("pm"))
             .select("m", "cid", F.col("pm.mm").alias("ce"))
         )
-        _pq_memo[key] = cent.localCheckpoint(eager=True)
-    return _pq_memo[key]
+        return cent.localCheckpoint(eager=True)
+
+    return build_once(spark, sf_dir, "pq_model", build)
 
 
 def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The memoized full-corpus PQ code assignment (vec_id, m, cid, d9)
     against the refined codebook."""
-    key = _pq_key(spark, sf_dir, "codes")
-    if key not in _pq_memo:
+
+    def build() -> DataFrame:
         emb = spread_small_scan(load_table(spark, sf_dir, "embeddings"))
         v = emb.select("vec_id", as_double("embedding").alias("e"))
         sub = pq_subvectors(v)
-        _pq_memo[key] = (
+        return (
             _pq_assign(sub, pq_model(spark, sf_dir))
             .select("vec_id", "m", "cid", "d9")
             .localCheckpoint(eager=True)
         )
-    return _pq_memo[key]
 
-
-def clear_pq_memo() -> None:
-    """Drop memoized PQ artifacts (tests that rewrite an sf_dir call this)."""
-    _pq_memo.clear()
+    return build_once(spark, sf_dir, "pq_codes", build)
 
 
 def quantize_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:

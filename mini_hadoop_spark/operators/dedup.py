@@ -33,7 +33,6 @@ Scale posture (100 TB):
 
 from __future__ import annotations
 
-import os
 import threading
 from functools import reduce
 
@@ -47,6 +46,7 @@ from mini_hadoop_spark.functions.text import (
 )
 from mini_hadoop_spark.functions.partitioning import spread_small_scan
 from mini_hadoop_spark.functions.vectors import cosine, dot
+from mini_hadoop_spark.session import build_once
 from mini_hadoop_spark.sources.catalog import load_table
 
 # Near-dup output threshold: sf0.01 has 25 planted near-dup pairs with
@@ -74,7 +74,7 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     index_build (the judge measured the md5 build at 22.7 s where the
     warm plan costs ~3.6 s).  One shared materialization means the first
     build pays it and the other three reuse the checkpointed blocks —
-    same pattern as the pair/label memo below, same clear_memo() hook.
+    same build_once memo as the pair/label frames below.
 
     The scan is spread across cores first: a small-SF single-file scan
     would otherwise tokenize on one core (see functions/partitioning.py
@@ -93,10 +93,10 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     read the carried column instead of re-aggregating + joining the
     corpus-sized stream.  The one-time repartition cost lands in the
     itemized index build, like the materialization itself."""
-    key = _memo_key(spark, sf_dir, "shingles", "")
-    if key not in _memo:
+
+    def build() -> DataFrame:
         docs = spread_small_scan(load_table(spark, sf_dir, "documents"))
-        _memo[key] = (
+        return (
             docs.select("doc_id", tokens("text").alias("t"))
             .select("doc_id", shingles("t").alias("sharr"))
             .select(
@@ -114,7 +114,8 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartition("shingle")
             .localCheckpoint(eager=True)
         )
-    return _memo[key]
+
+    return build_once(spark, sf_dir, "doc_shingles", build)
 
 
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -321,22 +322,6 @@ WHERE NOT EXISTS (SELECT 1 FROM existing e WHERE e.content_hash = b.content_hash
 # ---------------------------------------------------------------------------
 
 _PAIR_METHODS = ("jaccard", "minhash", "minhash_md5")
-_memo: dict[tuple, DataFrame] = {}
-#: (n_vectors, candidate_estimate) per (session, corpus, threshold,
-#: dims) — the grid preflight's two tiny jobs run once per corpus
-_grid_estimate_memo: dict[tuple, tuple] = {}
-
-
-def _memo_key(spark: SparkSession, sf_dir: str, what: str, method: str) -> tuple:
-    return (spark.sparkContext.applicationId, os.path.normpath(sf_dir), what, method)
-
-
-def clear_memo() -> None:
-    """Drop memoized pair/label frames and grid preflight estimates
-    (tests that rewrite an sf_dir in place call this; distinct tmp dirs
-    never collide)."""
-    _memo.clear()
-    _grid_estimate_memo.clear()
 
 
 def near_dup_pairs(spark: SparkSession, sf_dir: str, method: str = "jaccard") -> DataFrame:
@@ -345,25 +330,28 @@ def near_dup_pairs(spark: SparkSession, sf_dir: str, method: str = "jaccard") ->
     ``jaccard`` (exact) or ``est_jaccard`` (minhash estimate)."""
     if method not in _PAIR_METHODS:
         raise ValueError(f"unknown near-dup method {method!r}; expected one of {_PAIR_METHODS}")
-    key = _memo_key(spark, sf_dir, "pairs", method)
-    if key not in _memo:
-        plan = {
-            "jaccard": _near_jaccard_plan,
-            "minhash": _minhash_lsh_plan,
-            "minhash_md5": _minhash_lsh_md5_plan,
-        }[method]
-        _memo[key] = plan(spark, sf_dir).localCheckpoint(eager=True)
-    return _memo[key]
+    plan = {
+        "jaccard": _near_jaccard_plan,
+        "minhash": _minhash_lsh_plan,
+        "minhash_md5": _minhash_lsh_md5_plan,
+    }[method]
+    return build_once(
+        spark,
+        sf_dir,
+        ("near_dup_pairs", method),
+        lambda: plan(spark, sf_dir).localCheckpoint(eager=True),
+    )
 
 
 def near_dup_labels(spark: SparkSession, sf_dir: str, method: str = "jaccard") -> DataFrame:
     """(id, label) connected-component labels over the near-dup pair
     graph — memoized so clusters/triangles run the HashMin loop once."""
-    key = _memo_key(spark, sf_dir, "labels", method)
-    if key not in _memo:
+
+    def build() -> DataFrame:
         pairs = near_dup_pairs(spark, sf_dir, method).select("doc_a", "doc_b")
-        _memo[key] = connected_components(pairs, src="doc_a", dst="doc_b", max_iter=CC_MAX_ITER)
-    return _memo[key]
+        return connected_components(pairs, src="doc_a", dst="doc_b", max_iter=CC_MAX_ITER)
+
+    return build_once(spark, sf_dir, ("near_dup_labels", method), build)
 
 
 def _near_jaccard_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -793,23 +781,20 @@ def minhash_signature_column(shingles_col: str, num_hashes: int = NUM_HASHES) ->
     )
 
 
-def _minhash_lsh_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash + banded LSH near-dup — the 100 TB path.
-
-    signatures → explode into BANDS (band_id, xxhash64(band slice)) keys
-    → self-join per bucket (only same-bucket docs meet; no all-pairs) →
+def _lsh_pairs(sigs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, est_jaccard) from (doc_id, sig) MinHash signatures
+    of any hash family: explode into BANDS (band_id, band_hash) keys →
+    self-join per bucket (only same-bucket docs meet; no all-pairs) →
     estimate Jaccard as the fraction of equal signature positions →
-    threshold.  Fully deterministic (xxhash64 is seeded, data-dependent,
-    engine-stable) but DuckDB lacks xxhash64, so the driver applies the
-    rows-only check; tests/test_llm_pipeline.py verifies recall against the
-    exact-Jaccard twin instead."""
-    sh = _doc_shingles(spark, sf_dir)
-    sigs = minhash_signatures(sh)
-    # Band key = xxhash64 over the band's 4 signature longs DIRECTLY
-    # (multi-arg form) — equal slices hash equal, so the bucket-join
-    # semantics are unchanged, but the per-doc key build is 16 long
-    # hashes instead of 16 string concats over 64 casts (measured ~2.4x
-    # on the whole query at sf0.1).
+    threshold.
+
+    Band key = xxhash64 over the band's signature longs DIRECTLY
+    (multi-arg form): equal slices hash equal, so every pair sharing a
+    whole band meets, and the estimate + threshold decide the output
+    (a rare 64-bit key collision only adds a candidate the threshold
+    then judges).  The per-doc key build is 16 long hashes instead of
+    16 string concats over 64 casts (measured ~2.4x on the whole query
+    at sf0.1)."""
     band_hashes = F.array(
         *[
             F.xxhash64(
@@ -845,6 +830,16 @@ def _minhash_lsh_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _minhash_lsh_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash + banded LSH near-dup — the 100 TB path: xxhash64
+    signatures into the shared :func:`_lsh_pairs` tail.  Fully
+    deterministic (xxhash64 is seeded, data-dependent, engine-stable)
+    but DuckDB lacks xxhash64, so the driver applies the rows-only
+    check; tests/test_llm_pipeline.py verifies recall against the
+    exact-Jaccard twin instead."""
+    return _lsh_pairs(minhash_signatures(_doc_shingles(spark, sf_dir)))
+
+
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registered query: the memoized banded-LSH pair set."""
     return near_dup_pairs(spark, sf_dir, "minhash")
@@ -859,10 +854,10 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 #   h0  = first 15 hex chars of md5(shingle) parsed base-16 (60-bit, >= 0)
 #   h_i = (A_i * (h0 % P) + B_i) % P            P = 2^31 - 1 (Mersenne)
 # A_i/B_i are fixed constants from a seeded PRNG, embedded in both the
-# Spark expressions and the DuckDB SQL.  Same signature → banding → bucket
-# equi-join → position-agreement estimate plan shape as the xxhash64 form
-# (never all-pairs), so the driver's hash-match on this twin is direct
-# evidence for the production plan's semantics.  md5 is ~3x the per-shingle
+# Spark expressions and the DuckDB SQL.  Only the signature differs: it
+# feeds the production banding → bucket equi-join → position-agreement
+# estimate tail (``_lsh_pairs``, never all-pairs), so the driver's
+# hash-match on this twin checks that tail itself.  md5 is ~3x the per-shingle
 # hash cost of xxhash64 — the xxhash64 form stays the 100 TB path.
 # ---------------------------------------------------------------------------
 
@@ -883,9 +878,10 @@ MD5_MINHASH_COEFFS = _md5_minhash_coeffs()
 
 
 def _minhash_lsh_md5_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Oracle-auditable MinHash+LSH: identical plan shape to
-    ``_minhash_lsh_plan`` (signature agg → 16x4 band explode → bucket
-    equi-join → agreement-fraction threshold), engine-portable hashes."""
+    """Oracle-auditable MinHash+LSH: engine-portable md5 signatures into
+    the same :func:`_lsh_pairs` tail as ``_minhash_lsh_plan``.  The
+    oracle's ``concat_ws`` band keys meet on exactly the equal slices
+    the xxhash64 keys meet on, so the thresholded pair sets agree."""
     p = MD5_MINHASH_P
     sh = _doc_shingles(spark, sf_dir)
     h0p = (
@@ -898,43 +894,8 @@ def _minhash_lsh_md5_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         for i, (a, b) in enumerate(MD5_MINHASH_COEFFS)
     ]
     wide = based.groupBy("doc_id").agg(*aggs)
-    sigs = wide.select(
-        "doc_id", F.array(*[f"h{i}" for i in range(NUM_HASHES)]).alias("sig")
-    )
-    band_keys = F.array(
-        *[
-            F.concat_ws(
-                "-",
-                *[
-                    F.col("sig").getItem(b * ROWS_PER_BAND + r).cast("string")
-                    for r in range(ROWS_PER_BAND)
-                ],
-            )
-            for b in range(BANDS)
-        ]
-    )
-    banded = sigs.select(
-        "doc_id", "sig", F.posexplode(band_keys).alias("band_id", "band_key")
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    est = F.size(
-        F.expr("filter(zip_with(a.sig, b.sig, (x, y) -> x = y), v -> v)")
-    ) / F.lit(float(NUM_HASHES))
-    return (
-        a.join(
-            b,
-            (F.col("a.band_id") == F.col("b.band_id"))
-            & (F.col("a.band_key") == F.col("b.band_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            round_half_up(est, 6).alias("est_jaccard"),
-        )
-        .filter(F.col("est_jaccard") >= JACCARD_THRESHOLD)
-        .dropDuplicates(["doc_a", "doc_b"])
+    return _lsh_pairs(
+        wide.select("doc_id", F.array(*[f"h{i}" for i in range(NUM_HASHES)]).alias("sig"))
     )
 
 
@@ -1106,26 +1067,26 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized per (session, sf_dir) — the same build-once index
     policy as the MinHash family (bench itemizes the build as
     index_build.pairs_simhash)."""
-    key = _memo_key(spark, sf_dir, "pairs", "simhash")
-    if key in _memo:
-        return _memo[key]
-    docs = spread_small_scan(load_table(spark, sf_dir, "documents"))
-    # token INSTANCES with cnt=1, not a pre-counted (doc, token) frame:
-    # sum_instances(±1) == sum_distinct(cnt·±1), so skipping the
-    # (doc_id, token) count drops a full shuffle of the token stream —
-    # the 64 weight aggregates partial-combine map-side either way, and
-    # the one remaining shuffle carries docs x 65 partial rows only.
-    toks = (
-        docs.select("doc_id", F.explode(tokens("text")).alias("token"))
-        .withColumn("cnt", F.lit(1).cast("long"))
-    )
-    # materialize the (doc_id, simhash) table before the block self-join:
-    # both join sides otherwise re-run the whole tokenize+64-weight
-    # fingerprint pipeline (the same build-the-index-once pattern as the
-    # LSH/IVF/shingle indexes; |docs| rows of 2 longs)
-    fp = simhash(toks).localCheckpoint(eager=False)
-    _memo[key] = _simhash_block_pairs(fp, SIMHASH_BITS).localCheckpoint(eager=True)
-    return _memo[key]
+
+    def build() -> DataFrame:
+        docs = spread_small_scan(load_table(spark, sf_dir, "documents"))
+        # token INSTANCES with cnt=1, not a pre-counted (doc, token) frame:
+        # sum_instances(±1) == sum_distinct(cnt·±1), so skipping the
+        # (doc_id, token) count drops a full shuffle of the token stream —
+        # the 64 weight aggregates partial-combine map-side either way, and
+        # the one remaining shuffle carries docs x 65 partial rows only.
+        toks = (
+            docs.select("doc_id", F.explode(tokens("text")).alias("token"))
+            .withColumn("cnt", F.lit(1).cast("long"))
+        )
+        # materialize the (doc_id, simhash) table before the block self-join:
+        # both join sides otherwise re-run the whole tokenize+64-weight
+        # fingerprint pipeline (the same build-the-index-once pattern as the
+        # LSH/IVF/shingle indexes; |docs| rows of 2 longs)
+        fp = simhash(toks).localCheckpoint(eager=False)
+        return _simhash_block_pairs(fp, SIMHASH_BITS).localCheckpoint(eager=True)
+
+    return build_once(spark, sf_dir, ("near_dup_pairs", "simhash"), build)
 
 
 def _simhash_block_pairs(fp: DataFrame, num_bits: int) -> DataFrame:
@@ -1184,20 +1145,20 @@ def dedup_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes): identical plan shape to ``dedup_simhash`` — SWAR-packed
     majority aggregate, block-pigeonhole candidates, exact Hamming.
     Memoized + materialized per (session, sf_dir) like its sibling."""
-    key = _memo_key(spark, sf_dir, "pairs", "simhash_md5")
-    if key in _memo:
-        return _memo[key]
-    docs = spread_small_scan(load_table(spark, sf_dir, "documents"))
-    toks = (
-        docs.select("doc_id", F.explode(tokens("text")).alias("token"))
-        .withColumn("cnt", F.lit(1).cast("long"))
-        .withColumn(
-            "hm", F.conv(F.substring(F.md5(F.col("token")), 1, 15), 16, 10).cast("long")
+
+    def build() -> DataFrame:
+        docs = spread_small_scan(load_table(spark, sf_dir, "documents"))
+        toks = (
+            docs.select("doc_id", F.explode(tokens("text")).alias("token"))
+            .withColumn("cnt", F.lit(1).cast("long"))
+            .withColumn(
+                "hm", F.conv(F.substring(F.md5(F.col("token")), 1, 15), 16, 10).cast("long")
+            )
         )
-    )
-    fp = simhash(toks, num_bits=SIMHASH_MD5_BITS, h_col="hm").localCheckpoint(eager=False)
-    _memo[key] = _simhash_block_pairs(fp, SIMHASH_MD5_BITS).localCheckpoint(eager=True)
-    return _memo[key]
+        fp = simhash(toks, num_bits=SIMHASH_MD5_BITS, h_col="hm").localCheckpoint(eager=False)
+        return _simhash_block_pairs(fp, SIMHASH_MD5_BITS).localCheckpoint(eager=True)
+
+    return build_once(spark, sf_dir, ("near_dup_pairs", "simhash_md5"), build)
 
 
 def _simhash_md5_sql() -> str:
@@ -1540,16 +1501,17 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     The preflight estimate (see :func:`embedding_dup_pairs`) is
     memoized per (session, corpus) — a fixed corpus's cell histogram
     never changes, so the guard's two tiny jobs run once, not per
-    invocation; cleared by :func:`clear_memo` like every other
+    invocation; dropped by ``session.clear`` like every other
     session-scoped artifact."""
     emb = spread_small_scan(load_table(spark, sf_dir, "embeddings"))
     v = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-    key = _memo_key(spark, sf_dir, "grid_estimate", f"{COSINE_DUP_THRESHOLD}/{GRID_DIMS}")
-    if key not in _grid_estimate_memo:
-        _grid_estimate_memo[key] = grid_candidate_estimate(
-            v, COSINE_DUP_THRESHOLD, GRID_DIMS
-        )
-    return embedding_dup_pairs(v, precomputed_estimate=_grid_estimate_memo[key])
+    estimate = build_once(
+        spark,
+        sf_dir,
+        ("grid_estimate", COSINE_DUP_THRESHOLD, GRID_DIMS),
+        lambda: grid_candidate_estimate(v, COSINE_DUP_THRESHOLD, GRID_DIMS),
+    )
+    return embedding_dup_pairs(v, precomputed_estimate=estimate)
 
 
 DEDUP_EMBEDDING_COSINE_SQL = f"""

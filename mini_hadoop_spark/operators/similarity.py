@@ -31,13 +31,13 @@ from __future__ import annotations
 
 import hashlib
 import math
-import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 
 from mini_hadoop_spark.functions.text import round_half_up, sql_round_half_up
 from mini_hadoop_spark.functions.vectors import as_double, dot, norm
 from mini_hadoop_spark.functions.partitioning import spread_small_scan
+from mini_hadoop_spark.session import build_once
 from mini_hadoop_spark.sources.catalog import load_table
 
 TOP_K = 5
@@ -74,24 +74,27 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ann_query_ids(v: DataFrame, budget: int | None = None) -> DataFrame:
+def ann_query_ids(v: DataFrame, budget: int | None = None, cols: tuple = ()) -> DataFrame:
     """The ``budget`` (default ANN_QUERY_BUDGET) query vec_ids whose
-    md5(vec_id) ranks lowest — the absolute, deterministic,
-    engine-portable query sample EVERY ANN arm and audit shares (brute
-    ground truth included, so recall joins always align; the Matryoshka
-    audit passes its own budget — ONE picker, r15 review, so the idiom
-    cannot drift between sites).  ``orderBy(mh, vec_id).limit(K)``
-    compiles to TakeOrderedAndProject — per-partition top-K heaps
-    merged on the driver, NO single-task global sort even at 10^9+ ids
-    — and selects exactly the same deterministic set a rank-<=K window
-    would, so every downstream oracle hash is unchanged.  Result is
+    md5(vec_id) ranks lowest, plus the payload ``cols`` — the absolute,
+    deterministic, engine-portable query sample EVERY ANN arm and audit
+    shares (brute ground truth included, so recall joins always align;
+    the Matryoshka audit passes its own budget and carries ``e`` — ONE
+    picker, so the idiom cannot drift between sites).
+    ``orderBy(mh, vec_id).limit(K)`` compiles to TakeOrderedAndProject
+    — per-partition top-K heaps merged on the driver, NO single-task
+    global sort even at 10^9+ ids — and selects exactly the same
+    deterministic set a rank-<=K window would, so every downstream
+    oracle hash is unchanged.  Payload columns ride through the heap,
+    so fetching the sample with its vectors needs no join back onto the
+    corpus.  Result is
     always exactly min(budget, n) rows: broadcast-able at any scale."""
     return (
-        v.select("vec_id")
+        v.select("vec_id", *cols)
         .withColumn("mh", F.md5(F.col("vec_id").cast("string")))
         .orderBy(F.col("mh"), F.col("vec_id"))
         .limit(ANN_QUERY_BUDGET if budget is None else budget)
-        .select("vec_id")
+        .select("vec_id", *cols)
     )
 
 
@@ -722,11 +725,10 @@ def fixed_point_means(assigned: DataFrame) -> DataFrame:
     )
 
 
-# (application, sf_dir, k) -> materialized quantizer.  An IVF quantizer
-# is a build-once artifact: every query against the same corpus probes
-# the same centroids, so rebuilding the seed scan + Lloyd step per query
-# call is pure waste (and the driver/bench call each query fresh).
-_quantizers: dict[tuple, DataFrame] = {}
+# An IVF quantizer is a build-once artifact: every query against the
+# same corpus probes the same centroids, so rebuilding the seed scan +
+# Lloyd step per query call is pure waste (and the driver/bench call
+# each query fresh).
 
 
 def ivf_quantizer(spark: SparkSession, sf_dir: str, k: int | None = None) -> DataFrame:
@@ -737,11 +739,12 @@ def ivf_quantizer(spark: SparkSession, sf_dir: str, k: int | None = None) -> Dat
     callers with their own scaling rule (SemDeDup) and tests."""
     if k is None:
         k = ivf_k(corpus_vector_count(spark, sf_dir))
-    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir), k)
-    if key not in _quantizers:
+
+    def build() -> DataFrame:
         v = _vectors(spark, sf_dir).select("vec_id", "e", "nv")
-        _quantizers[key] = ivf_index(v, k).localCheckpoint(eager=True)
-    return _quantizers[key]
+        return ivf_index(v, k).localCheckpoint(eager=True)
+
+    return build_once(spark, sf_dir, ("ivf_quantizer", k), build)
 
 
 def ivf_lists(spark: SparkSession, sf_dir: str, k: int | None = None) -> DataFrame:
@@ -752,13 +755,12 @@ def ivf_lists(spark: SparkSession, sf_dir: str, k: int | None = None) -> DataFra
     corpus-derived ``ivf_k`` sizing (matches the quantizer default)."""
     if k is None:
         k = ivf_k(corpus_vector_count(spark, sf_dir))
-    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir), k, "lists")
-    if key not in _quantizers:
+
+    def build() -> DataFrame:
         v = _vectors(spark, sf_dir).select("vec_id", "e", "nv")
-        _quantizers[key] = _assign(v, ivf_quantizer(spark, sf_dir, k), 1, "cid").localCheckpoint(
-            eager=True
-        )
-    return _quantizers[key]
+        return _assign(v, ivf_quantizer(spark, sf_dir, k), 1, "cid").localCheckpoint(eager=True)
+
+    return build_once(spark, sf_dir, ("ivf_lists", k), build)
 
 
 # SemDeDup K-scaling (VERDICT r9 weak item): the published recipe keeps
@@ -773,18 +775,18 @@ SEMDEDUP_TARGET_CLUSTER = 32
 SEMDEDUP_K_MIN = 8
 SEMDEDUP_K_MAX = 65536
 
-_corpus_counts: dict[tuple, int] = {}
-
 
 def corpus_vector_count(spark: SparkSession, sf_dir: str) -> int:
     """Memoized embeddings-table row count per (session, corpus) — one
     parquet metadata count, used to derive corpus-scaled parameters
     (SemDeDup's K).  Not a driver-side result collect: it's the same
     scalar-statistic pattern as sizing shuffle partitions."""
-    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir))
-    if key not in _corpus_counts:
-        _corpus_counts[key] = load_table(spark, sf_dir, "embeddings").count()
-    return _corpus_counts[key]
+    return build_once(
+        spark,
+        sf_dir,
+        "corpus_vector_count",
+        lambda: load_table(spark, sf_dir, "embeddings").count(),
+    )
 
 
 def semdedup_k(n: int) -> int:
@@ -935,7 +937,6 @@ _ANN_PLANS = {
     "ivf": _ann_ivf_plan,
     "ivfpq": _ann_ivfpq_plan,
 }
-_ann_memo: dict[tuple, DataFrame] = {}
 
 
 def ann_results(spark: SparkSession, sf_dir: str, method: str) -> DataFrame:
@@ -944,19 +945,12 @@ def ann_results(spark: SparkSession, sf_dir: str, method: str) -> DataFrame:
     registered query and every audit that consumes it."""
     if method not in _ANN_PLANS:
         raise ValueError(f"unknown ANN method {method!r}; expected one of {sorted(_ANN_PLANS)}")
-    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir), "ann", method)
-    if key not in _ann_memo:
-        _ann_memo[key] = _ANN_PLANS[method](spark, sf_dir).localCheckpoint(eager=True)
-    return _ann_memo[key]
-
-
-def clear_memo() -> None:
-    """Drop memoized quantizer/list/ANN frames and corpus counts (tests
-    that rewrite an sf_dir in place call this; distinct tmp dirs never
-    collide)."""
-    _quantizers.clear()
-    _ann_memo.clear()
-    _corpus_counts.clear()
+    return build_once(
+        spark,
+        sf_dir,
+        ("ann", method),
+        lambda: _ANN_PLANS[method](spark, sf_dir).localCheckpoint(eager=True),
+    )
 
 
 def similarity_topk_brute(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1501,25 +1495,6 @@ MATRYOSHKA_DIMS = (8, 16, 32)
 MATRYOSHKA_QUERY_BUDGET = 32
 
 
-def _matryoshka_pick(v: DataFrame) -> DataFrame:
-    """The Matryoshka audit's query sample — the same deterministic
-    ``orderBy(md5(vec_id), vec_id).limit(K)`` TakeOrderedAndProject
-    idiom as :func:`ann_query_ids` (see its docstring for why this is
-    the engine-portable pick), selecting the IDENTICAL vec_id set, but
-    carrying the vector payload ``e`` through the top-K heap so the
-    driver-side collect is ONE job (r18: the old id-only pick needed a
-    join back onto the corpus to attach e — a second pass + shuffle
-    just to fetch 32 vectors).  Module-level so the plan-guard test can
-    pin the TakeOrdered shape (the full query hides it behind a driver
-    collect)."""
-    return (
-        v.withColumn("mh", F.md5(F.col("vec_id").cast("string")))
-        .orderBy(F.col("mh"), F.col("vec_id"))
-        .limit(MATRYOSHKA_QUERY_BUDGET)
-        .select("vec_id", "e")
-    )
-
-
 def _arrow_matrix(vectors, d: int):
     """An Arrow list<double> column as an (n, d) float64 matrix.  Every
     row must be a non-null list of exactly ``d`` non-null values: the
@@ -1577,7 +1552,7 @@ def similarity_matryoshka_agreement(spark: SparkSession, sf_dir: str) -> DataFra
     # already hoisted the norms; the remaining per-pair folds were the
     # floor for a pure-Catalyst plan).  The scoring is now ONE
     # mapInArrow kernel over the corpus scan: the bounded query sample
-    # (≤ MATRYOSHKA_QUERY_BUDGET rows — the same _matryoshka_pick set)
+    # (≤ MATRYOSHKA_QUERY_BUDGET rows — the ann_query_ids pick with e)
     # is collected to the driver and shipped in the task closure, and
     # each Arrow batch scores against all queries with NumPy loops that
     # replay the EXACT IEEE op sequence of the Catalyst fold:
@@ -1596,7 +1571,7 @@ def similarity_matryoshka_agreement(spark: SparkSession, sf_dir: str) -> DataFra
     # the bounded query set rides the closure (§4.5 — setup once per
     # task, Arrow batches amortized), and only (vec_id, e) crosses the
     # Python boundary.
-    pick_rows = _matryoshka_pick(v0).collect()
+    pick_rows = ann_query_ids(v0, MATRYOSHKA_QUERY_BUDGET, ("e",)).collect()
     q_ids = [int(r["vec_id"]) for r in pick_rows]
     q_vecs = [list(r["e"]) for r in pick_rows]
     dims = tuple(MATRYOSHKA_DIMS)
@@ -2045,40 +2020,40 @@ def similarity_ann_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     audit here (the ANN_QUERY_BUDGET md5-ranked sample, ann_query_ids).
 
     Cites reference surface: none (extension operator — SURVEY §2.3)."""
-    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir), "nprobe_curve")
-    if key in _ann_memo:
-        return _ann_memo[key]
-    brute = (
-        ann_results(spark, sf_dir, "brute")
-        .filter(F.col("rnk") <= 3)
-        .select("query_id", "neighbor_id")
-    )
-    totals = brute.agg(
-        F.countDistinct("query_id").alias("n_queries"),
-        F.count("*").alias("n_true"),
-    )
-    arms = []
-    for np_ in NPROBE_CURVE:
-        ann = _ann_ivf_plan(spark, sf_dir, nprobe=np_).select("query_id", "neighbor_id")
-        hit = brute.join(ann, ["query_id", "neighbor_id"], "left_semi").agg(
-            F.count("*").alias("n_hit")
+
+    def build() -> DataFrame:
+        brute = (
+            ann_results(spark, sf_dir, "brute")
+            .filter(F.col("rnk") <= 3)
+            .select("query_id", "neighbor_id")
         )
-        arms.append(
-            totals.crossJoin(F.broadcast(hit)).select(
-                F.lit(np_).cast("long").alias("nprobe"),
-                "n_queries",
-                "n_true",
-                "n_hit",
-                round_half_up(
-                    F.col("n_hit").cast("double") / F.col("n_true"), 6
-                ).alias("recall"),
+        totals = brute.agg(
+            F.countDistinct("query_id").alias("n_queries"),
+            F.count("*").alias("n_true"),
+        )
+        arms = []
+        for np_ in NPROBE_CURVE:
+            ann = _ann_ivf_plan(spark, sf_dir, nprobe=np_).select("query_id", "neighbor_id")
+            hit = brute.join(ann, ["query_id", "neighbor_id"], "left_semi").agg(
+                F.count("*").alias("n_hit")
             )
-        )
-    out = arms[0]
-    for arm in arms[1:]:
-        out = out.unionAll(arm)
-    _ann_memo[key] = out.localCheckpoint(eager=True)
-    return _ann_memo[key]
+            arms.append(
+                totals.crossJoin(F.broadcast(hit)).select(
+                    F.lit(np_).cast("long").alias("nprobe"),
+                    "n_queries",
+                    "n_true",
+                    "n_hit",
+                    round_half_up(
+                        F.col("n_hit").cast("double") / F.col("n_true"), 6
+                    ).alias("recall"),
+                )
+            )
+        out = arms[0]
+        for arm in arms[1:]:
+            out = out.unionAll(arm)
+        return out.localCheckpoint(eager=True)
+
+    return build_once(spark, sf_dir, "nprobe_curve", build)
 
 
 def ivf_list_balance(spark: SparkSession, sf_dir: str) -> DataFrame:

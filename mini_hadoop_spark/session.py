@@ -12,8 +12,11 @@ session timezone (oracle comparability), Arrow for the Pandas-UDF paths.
 from __future__ import annotations
 
 import os
+import threading
+from typing import Callable
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, SparkSession
 
 #: default driver heap as a share of physical RAM: the rest is left to the
 #: JVM's off-heap use, the Python workers and the OS page cache
@@ -73,3 +76,52 @@ def get_spark(app_name: str = "mini_hadoop_spark", cpus: int | None = None) -> S
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+# Build-once artifacts (indexes, checkpointed pair graphs, drained
+# streams, trained models, table plans) keyed on (applicationId,
+# normalized sf_dir, name): a fresh session or another corpus never sees
+# another's entry.  A hit is one dict lookup; a miss takes the key's own
+# lock, so concurrent first callers share one build while builds of
+# other keys (including nested ones: the artifact dependencies form a
+# DAG) proceed.  A build that raises stores nothing.
+_memo: dict[tuple, object] = {}
+_key_locks: dict[tuple, threading.Lock] = {}
+_key_locks_guard = threading.Lock()
+
+
+def build_once(spark: SparkSession, sf_dir: str, name, build: Callable):
+    """``build()``'s result, built once per (session, corpus, ``name``);
+    ``name`` is any hashable, e.g. ``("ivf_lists", k)``."""
+    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir), name)
+    try:
+        return _memo[key]
+    except KeyError:
+        pass
+    with _key_locks_guard:
+        lock = _key_locks.setdefault(key, threading.Lock())
+    with lock:
+        if key not in _memo:
+            _memo[key] = build()
+        return _memo[key]
+
+
+def clear() -> None:
+    """Drop every build-once artifact, for harnesses that need cold
+    re-runs or rewrite a corpus path in place.  Also frees the blocks of
+    every memoized localCheckpoint: ``Dataset.unpersist()`` only drops
+    CacheManager entries, so the checkpoint RDD, read off the frame's
+    analyzed ``LogicalRDD`` plan, is unpersisted directly."""
+    for value in list(_memo.values()):
+        for df in value if isinstance(value, tuple) else (value,):
+            if not isinstance(df, DataFrame):
+                continue
+            try:
+                plan = df._jdf.queryExecution().analyzed()
+                if plan.getClass().getSimpleName() == "LogicalRDD":
+                    plan.rdd().unpersist(False)
+            except Py4JError:
+                pass  # a stopped session has already freed the blocks
+    _memo.clear()
+    with _key_locks_guard:
+        _key_locks.clear()

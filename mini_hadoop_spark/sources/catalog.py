@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from mini_hadoop_spark.session import build_once
+
 TABLES = (
     "region",
     "nation",
@@ -52,29 +54,18 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # away from the DuckDB oracle, which treats the naive timestamps
     # as-is.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Memoize the UNEXECUTED DataFrame per (application, path): building
-    # it costs ~80 ms (Spark re-lists the path and re-reads the parquet
-    # footer on every spark.read.parquet), which a 200-query benchmark
-    # pass pays hundreds of times for identical plans.  This caches only
-    # the immutable plan object — no rows, no persisted result; every
-    # action against it still computes from the parquet input.  Keyed by
-    # applicationId so a fresh session (the driver's vanilla one, a new
-    # pytest session) never sees another session's frame.  The nanos
-    # conf side effect (set inside _load_adaptive when a nanos column is
-    # present) is session-global, so a memo hit preserves it too.
-    key = (spark.sparkContext.applicationId, table_path(sf_dir, name))
-    if key not in _df_memo:
-        _df_memo[key] = _load_adaptive(spark, table_path(sf_dir, name))
-    return _df_memo[key]
-
-
-#: (applicationId, path) → unexecuted DataFrame plan (see load_table)
-_df_memo: dict[tuple[str, str], DataFrame] = {}
-
-
-def clear_df_memo() -> None:
-    """Drop memoized table frames (tests that rewrite a path in place)."""
-    _df_memo.clear()
+    # Memoize the UNEXECUTED DataFrame per (application, corpus, table):
+    # building it costs ~80 ms (Spark re-lists the path and re-reads the
+    # parquet footer on every spark.read.parquet), which a 200-query
+    # benchmark pass pays hundreds of times for identical plans.  This
+    # caches only the immutable plan object — no rows, no persisted
+    # result; every action against it still computes from the parquet
+    # input.  The nanos conf side effect (set inside _load_adaptive when
+    # a nanos column is present) is session-global, so a memo hit
+    # preserves it too.
+    return build_once(
+        spark, sf_dir, ("table", name), lambda: _load_adaptive(spark, table_path(sf_dir, name))
+    )
 
 
 def _load_adaptive(spark: SparkSession, path: str) -> DataFrame:
@@ -201,11 +192,6 @@ def ts_encoding(spark: SparkSession, path: str, col: str = "ts") -> str:
     return _probe_encodings(spark, path).get(col, "ts")
 
 
-def events_ts_encoding(spark: SparkSession, path: str) -> str:
-    """Back-compat alias: the events ``ts`` column's encoding."""
-    return ts_encoding(spark, path, "ts")
-
-
 def normalize_ts_column(col: str, encoding: str):
     """Column expression converting a raw timestamp column in the given
     encoding to microsecond TimestampType (the driver/DuckDB view of the
@@ -217,11 +203,6 @@ def normalize_ts_column(col: str, encoding: str):
     if encoding == "ntz":
         return F.col(col).cast("timestamp")
     return F.col(col)
-
-
-def normalize_events_ts(encoding: str):
-    """Back-compat alias for the events ``ts`` column."""
-    return normalize_ts_column("ts", encoding)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -14,6 +14,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from mini_hadoop_spark.session import build_once
 from mini_hadoop_spark.sources.catalog import load_table
 from mini_hadoop_spark.workloads.pagerank import pagerank, pagerank_fixed_point
 from mini_hadoop_spark.workloads.wordcount import word_count, word_count_strict
@@ -60,7 +61,6 @@ GROUP BY word
 # JobResult.pairs DataFrame is the query result.  The oracle is the
 # same tokenizer's SQL (WORDCOUNT_SQL) — newlines inside documents
 # split rows in the text file, which tokenization is insensitive to.
-_mapreduce_wc_memo: dict[tuple, DataFrame] = {}
 
 
 #: deterministic staging dirs untouched for this long are presumed
@@ -92,7 +92,7 @@ def _mr_wordcount_stage_dir(sf_dir: str) -> str:
     is bounded by |corpora|, not |sessions|, and a killed driver leaks
     nothing a later session doesn't reuse or the age sweep reclaim.
     (Rewriting a corpus IN PLACE must remove its staging dir too — same
-    contract as the clear_memo hooks; unique tmp dirs, the normal test
+    contract as ``session.clear``; unique tmp dirs, the normal test
     pattern, never collide.)"""
     import hashlib
 
@@ -142,9 +142,9 @@ def mapreduce_wordcount_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from mini_hadoop_spark.engine.examples import word_count_submit_job
 
-    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir))
     stage = _mr_wordcount_stage_dir(sf_dir)
-    if key not in _mapreduce_wc_memo:
+
+    def build() -> DataFrame:
         _sweep_stale_mr_wordcount()
         txt_dir = os.path.join(stage, "docs_txt")
         if os.path.isdir(txt_dir) and not _stage_owned_by_me(stage):
@@ -174,9 +174,11 @@ def mapreduce_wordcount_query(spark: SparkSession, sf_dir: str) -> DataFrame:
                     raise
         _mr_wc_live_stages.add(stage)
         result = word_count_submit_job(spark, [txt_dir], sort_desc_by_count=False)
-        _mapreduce_wc_memo[key] = result.pairs.select(
+        return result.pairs.select(
             F.col("key").alias("word"), F.col("value").cast("long").alias("cnt")
         )
+
+    pairs = build_once(spark, sf_dir, "mapreduce_wordcount", build)
     # refresh the mtime on EVERY use — memo hits included (ADVICE r14:
     # a long-lived session that only hits the memo must still look live
     # to OTHER processes' sweeps; our own sweep exempts live stages)
@@ -184,7 +186,7 @@ def mapreduce_wordcount_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.utime(stage, None)
     except OSError:
         pass  # another session's staging we merely reuse, or already swept
-    return _mapreduce_wc_memo[key]
+    return pairs
 
 
 def _lineitem_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -243,25 +245,23 @@ SELECT page, round(rank, 8) AS rank FROM iter2
 PAGERANK_CONV_TOL9 = 50_000_000  # mean |Δrank| < 0.05 rank units/page
 PAGERANK_CONV_MAX_ITERS = 12  # converges at k=8 on sf0.001/0.01/0.1
 
-_pagerank_conv_memo: dict[tuple, tuple] = {}
-
 
 def pagerank_converged_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank iterated UNTIL CONVERGED (d=0.85, integer fixed-point
     ranks, mean-|Δ| stop rule) — (page, rank_fp9, iters).  Memoized per
     (session, corpus): the converged rank vector is a build-once
     artifact like the ANN indexes."""
-    import os as _os
-
-    key = (spark.sparkContext.applicationId, _os.path.normpath(sf_dir))
-    if key not in _pagerank_conv_memo:
-        _pagerank_conv_memo[key] = pagerank_fixed_point(
+    ranks, iters = build_once(
+        spark,
+        sf_dir,
+        "pagerank_converged",
+        lambda: pagerank_fixed_point(
             _lineitem_edges(spark, sf_dir),
             damping=PAGERANK_DAMPING,
             tol9=PAGERANK_CONV_TOL9,
             max_iters=PAGERANK_CONV_MAX_ITERS,
-        )
-    ranks, iters = _pagerank_conv_memo[key]
+        ),
+    )
     return ranks.select(
         "page",
         F.col("rank9").alias("rank_fp9"),

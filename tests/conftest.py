@@ -26,6 +26,22 @@ def spark():
     spark.stop()
 
 
+def persistent_rdd_ids(spark) -> set[int]:
+    """Ids of every RDD the JVM currently holds persisted blocks for."""
+    it = spark.sparkContext._jsc.sc().getPersistentRDDs().keysIterator()
+    ids = set()
+    while it.hasNext():
+        ids.add(int(it.next()))
+    return ids
+
+
+def checkpoint_rdd_id(df) -> int:
+    """The id of the RDD behind a localCheckpoint'd frame's LogicalRDD."""
+    plan = df._jdf.queryExecution().analyzed()
+    assert plan.getClass().getSimpleName() == "LogicalRDD"
+    return int(plan.rdd().id())
+
+
 def duck_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
     """Mirror the driver's DuckDB side: tables pre-registered as views."""
     con = duckdb.connect()

@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import os
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, checkpoint_rdd_id, persistent_rdd_ids
 
 
 def test_curve_invariants_and_eval_consistency(spark):
@@ -34,14 +34,15 @@ def test_training_memoized_across_queries(spark):
     """Both registered queries must share ONE memoized training run per
     (session, corpus) — the build-once model discipline bench.py
     itemizes as classifier_model."""
+    from mini_hadoop_spark import session
     from mini_hadoop_spark.operators import classifier
 
     classifier.classifier_train_curve(spark, SF_DIR).collect()
-    key = (spark.sparkContext.applicationId, os.path.normpath(SF_DIR))
-    assert key in classifier._train_memo
-    memo_obj = classifier._train_memo[key]
+    key = (spark.sparkContext.applicationId, os.path.normpath(SF_DIR), "cls_train")
+    assert key in session._memo
+    memo_obj = session._memo[key]
     classifier.classifier_eval_confusion(spark, SF_DIR).collect()
-    assert classifier._train_memo[key] is memo_obj
+    assert session._memo[key] is memo_obj
 
 
 def test_student_learns_teacher_at_driver_sf(spark):
@@ -98,6 +99,7 @@ def test_train_prod_deterministic_and_learns(spark):
     from pyspark.sql import functions as F
 
     from mini_hadoop_spark.operators import classifier
+    from mini_hadoop_spark.session import clear
 
     first = [tuple(r) for r in classifier.classifier_train_prod(spark, SF_DIR).orderBy("epoch").collect()]
     n_train = (
@@ -109,25 +111,26 @@ def test_train_prod_deterministic_and_learns(spark):
     acc = final[4] / (final[3] + final[4])
     assert acc >= 0.85, f"prod-geometry student stopped learning: {acc:.3f}"
 
-    classifier.clear_memo()
+    clear()
     second = [tuple(r) for r in classifier.classifier_train_prod(spark, SF_DIR).orderBy("epoch").collect()]
     assert first == second, "constant-batch training is not deterministic"
 
 
 def test_clear_memo_frees_checkpoint_blocks(spark):
-    """Code-review r14: Dataset.unpersist() is a no-op for
-    localCheckpoint blocks (it only drops CacheManager entries), so
-    clear_memo must unpersist the tracked checkpoint RDDs by id — a
-    cold re-run (the scale smoke between corpora) must not keep the
-    prior corpus's doc table in executor storage."""
+    """Dataset.unpersist() is a no-op for localCheckpoint blocks (it
+    only drops CacheManager entries), so session.clear must unpersist
+    the checkpoint RDDs themselves — a cold re-run (the scale smoke
+    between corpora) must not keep the prior corpus's doc table in
+    executor storage."""
     from mini_hadoop_spark.operators import classifier
+    from mini_hadoop_spark.session import clear
 
-    classifier.clear_memo()
-    base = len(classifier._persistent_rdd_ids(spark))
-    classifier._doc_table(spark, SF_DIR)
-    assert len(classifier._persistent_rdd_ids(spark)) > base
-    classifier.clear_memo()
-    assert len(classifier._persistent_rdd_ids(spark)) == base
+    clear()
+    before = persistent_rdd_ids(spark)
+    table_id = checkpoint_rdd_id(classifier._doc_table(spark, SF_DIR))
+    assert persistent_rdd_ids(spark) - before == {table_id}
+    clear()
+    assert not persistent_rdd_ids(spark) - before
 
 
 def test_train_prod_empty_train_split(spark, tmp_path):
@@ -147,31 +150,38 @@ def test_train_prod_empty_train_split(spark, tmp_path):
 
 
 def test_checkpoint_id_attribution_exact_under_concurrency(spark):
-    """ADVICE r15: _local_checkpoint_tracked must attribute EXACTLY the
-    checkpoint RDD it created — even when another thread checkpoints
-    concurrently (bench's concurrent build groups).  Run two tracked
-    checkpoints racing each other repeatedly and assert each call
-    returns exactly one id and the ids never overlap; then unpersist by
-    id and confirm both frames' blocks are freed independently."""
+    """Two artifacts checkpointed by racing build_once calls each own
+    exactly their checkpoint RDD, and clear() frees exactly the
+    memoized ones: a checkpoint held outside the memo keeps its
+    blocks."""
     import threading
 
-    from mini_hadoop_spark.operators.classifier import _local_checkpoint_tracked
+    from mini_hadoop_spark.session import build_once, clear
 
+    outside = spark.range(10).localCheckpoint(eager=True)
+    outside_id = checkpoint_rdd_id(outside)
     results = {}
 
     def work(tag, n):
-        df = spark.range(n).selectExpr("id", "id * 2 AS x")
-        results[tag] = _local_checkpoint_tracked(spark, df)
+        results[tag] = build_once(
+            spark,
+            SF_DIR,
+            ("ckpt_race", tag, n),
+            lambda: spark.range(n).selectExpr("id", "id * 2 AS x").localCheckpoint(eager=True),
+        )
 
     for round_no in range(3):
         t1 = threading.Thread(target=work, args=("a", 1000 + round_no))
         t2 = threading.Thread(target=work, args=("b", 2000 + round_no))
         t1.start(); t2.start(); t1.join(); t2.join()
-        (da, ids_a), (db, ids_b) = results["a"], results["b"]
-        assert len(ids_a) == 1 and len(ids_b) == 1, (ids_a, ids_b)
-        assert not set(ids_a) & set(ids_b)
+        da, db = results["a"], results["b"]
+        id_a, id_b = checkpoint_rdd_id(da), checkpoint_rdd_id(db)
+        assert id_a != id_b
         assert da.count() == 1000 + round_no and db.count() == 2000 + round_no
-        jsc = spark.sparkContext._jsc.sc()
-        for rid in ids_a + ids_b:
-            assert jsc.getPersistentRDDs().contains(rid)
-            jsc.getPersistentRDDs().apply(rid).unpersist(False)
+        assert {id_a, id_b, outside_id} <= persistent_rdd_ids(spark)
+        clear()
+        live = persistent_rdd_ids(spark)
+        assert id_a not in live and id_b not in live
+        assert outside_id in live
+    assert outside.count() == 10
+    spark.sparkContext._jsc.sc().getPersistentRDDs().apply(outside_id).unpersist(False)

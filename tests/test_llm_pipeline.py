@@ -905,8 +905,8 @@ def test_semdedup_prunes_planted_cluster_dups(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from mini_hadoop_spark.operators import similarity
     from mini_hadoop_spark.operators.dedup import SEMDEDUP_TAU, dedup_semantic_semdedup
+    from mini_hadoop_spark.session import clear
 
     rng = random.Random(11)
     vecs = [(i, [rng.gauss(0, 1) for _ in range(16)]) for i in range(40)]
@@ -924,9 +924,9 @@ def test_semdedup_prunes_planted_cluster_dups(spark, tmp_path):
         ),
         str(tmp_path / "embeddings.parquet"),
     )
-    similarity.clear_memo()
+    clear()
     out = {r.vec_id: r for r in dedup_semantic_semdedup(spark, str(tmp_path)).collect()}
-    similarity.clear_memo()
+    clear()
 
     assert len(out) == len(allv)
     for i in range(6):

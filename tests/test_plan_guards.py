@@ -527,11 +527,17 @@ def _take_ordered_picker_plans():
         return ann_query_ids(_vectors(spark, sf_dir))
 
     def matryoshka_pick(spark, sf_dir):
-        # the full query hides the pick behind a localCheckpoint, so pin
-        # the module-level pick builder directly
-        from mini_hadoop_spark.operators.similarity import _matryoshka_pick, _vectors
+        # the full query hides the pick behind a driver collect, so pin
+        # the pick it collects (ids plus the e payload) directly
+        from mini_hadoop_spark.operators.similarity import (
+            MATRYOSHKA_QUERY_BUDGET,
+            _vectors,
+            ann_query_ids,
+        )
 
-        return _matryoshka_pick(_vectors(spark, sf_dir).select("vec_id", "e"))
+        return ann_query_ids(
+            _vectors(spark, sf_dir).select("vec_id", "e"), MATRYOSHKA_QUERY_BUDGET, ("e",)
+        )
 
     def outlier_audit(spark, sf_dir):
         from mini_hadoop_spark.operators.similarity import embedding_outlier_audit

@@ -318,6 +318,7 @@ def test_streaming_lsh_near_dup_matches_batch(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from mini_hadoop_spark.operators import dedup
+    from mini_hadoop_spark.session import clear
     from mini_hadoop_spark.streaming.documents import DOCS_STREAM_SCHEMA
     from mini_hadoop_spark.streaming.lsh_dedup import streaming_near_dup_pairs
     from mini_hadoop_spark.streaming.windowed import run_stream_to_memory
@@ -350,7 +351,7 @@ def test_streaming_lsh_near_dup_matches_batch(spark, tmp_path):
         for r in spark.table(table).dropDuplicates(["doc_a", "doc_b"]).collect()
     }
 
-    dedup.clear_memo()
+    clear()
     want = {
         (r.doc_a, r.doc_b, r.est_jaccard)
         for r in dedup.near_dup_pairs(spark, SF_DIR, "minhash").collect()

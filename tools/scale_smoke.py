@@ -266,7 +266,7 @@ def build_lsh_corpus(spark, n: int) -> str:
 
 def lsh_family_mode(n: int) -> int:
     sys.path.insert(0, _repo_root())
-    from mini_hadoop_spark.session import get_spark
+    from mini_hadoop_spark.session import clear, get_spark
 
     spark = get_spark("scale-smoke-lsh")
     spark.sparkContext.setLogLevel("ERROR")
@@ -275,7 +275,7 @@ def lsh_family_mode(n: int) -> int:
     from mini_hadoop_spark.operators import dedup
 
     def cold_builds(sf_dir: str) -> dict:
-        dedup.clear_memo()
+        clear()
         t0 = time.perf_counter()
         pairs = dedup.near_dup_pairs(spark, sf_dir, "minhash")
         t_pairs = time.perf_counter() - t0
@@ -374,7 +374,7 @@ def semdedup_family_mode(n: int) -> int:
     growth at n-x is the direct evidence the corpus-derived K keeps
     cluster cardinality bounded."""
     sys.path.insert(0, _repo_root())
-    from mini_hadoop_spark.session import get_spark
+    from mini_hadoop_spark.session import clear, get_spark
 
     spark = get_spark("scale-smoke-semdedup")
     spark.sparkContext.setLogLevel("ERROR")
@@ -385,7 +385,7 @@ def semdedup_family_mode(n: int) -> int:
     from mini_hadoop_spark.operators import dedup, similarity
 
     def cold_run(sf_dir: str) -> dict:
-        similarity.clear_memo()
+        clear()
         k = similarity.semdedup_k(similarity.corpus_vector_count(spark, sf_dir))
         t0 = time.perf_counter()
         out = dedup.dedup_semantic_semdedup(spark, sf_dir)
@@ -479,7 +479,7 @@ def span_family_mode(n: int) -> int:
     evidence the gram-aggregate + gaps-and-islands chain has no
     super-linear term at this depth."""
     sys.path.insert(0, _repo_root())
-    from mini_hadoop_spark.session import get_spark
+    from mini_hadoop_spark.session import clear, get_spark
 
     spark = get_spark("scale-smoke-span")
     spark.sparkContext.setLogLevel("ERROR")
@@ -490,7 +490,7 @@ def span_family_mode(n: int) -> int:
     from mini_hadoop_spark.operators import dedup
 
     def cold_run(sf_dir: str) -> dict:
-        dedup.clear_memo()
+        clear()
         t0 = time.perf_counter()
         out = dedup.dedup_span_removal(spark, sf_dir).localCheckpoint(eager=True)
         t = time.perf_counter() - t0
@@ -991,15 +991,13 @@ def skew_family_mode() -> int:
     warm walls, memos cleared per corpus), plus the AQE skew-split
     probe on the unsalted join."""
     sys.path.insert(0, _repo_root())
-    from mini_hadoop_spark.session import get_spark
+    from mini_hadoop_spark.session import clear, get_spark
 
     spark = get_spark("scale-smoke-skew")
     spark.sparkContext.setLogLevel("ERROR")
     corpus = build_skew_corpus(spark)
 
     import __spark_entry__ as entry_mod
-
-    from mini_hadoop_spark.operators import dedup
 
     queries = entry_mod.queries()
     names = ["join_salted_skew", "quality_bigram_lm_score", "dedup_span_removal"]
@@ -1014,9 +1012,9 @@ def skew_family_mode() -> int:
 
     rows = []
     for name in names:
-        dedup.clear_memo()
+        clear()
         t1 = run(name, BASE)
-        dedup.clear_memo()
+        clear()
         tn = run(name, corpus)
         rows.append({"name": name, "t_base": t1, "t_skew": tn, "ratio": tn / t1})
         print(f"{name}: base {t1:.2f}s -> skewed {tn:.2f}s (ratio {rows[-1]['ratio']:.2f})")
@@ -1094,7 +1092,7 @@ def ann_family_mode(n: int) -> int:
     the sizing fix works.  Reuses the SemDeDup rolled-copy corpus (a
     common rotation preserves within-copy cosines)."""
     sys.path.insert(0, _repo_root())
-    from mini_hadoop_spark.session import get_spark
+    from mini_hadoop_spark.session import clear, get_spark
 
     spark = get_spark("scale-smoke-ann")
     spark.sparkContext.setLogLevel("ERROR")
@@ -1105,7 +1103,7 @@ def ann_family_mode(n: int) -> int:
     from mini_hadoop_spark.operators import similarity
 
     def cold_run(sf_dir: str) -> dict:
-        similarity.clear_memo()
+        clear()
         k = similarity.ivf_k(similarity.corpus_vector_count(spark, sf_dir))
         t0 = time.perf_counter()
         out = similarity.similarity_ann_ivf(spark, sf_dir)
@@ -1240,7 +1238,7 @@ def classifier_family_mode(n: int) -> int:
     CLS_BUCKETS integers at any scale (model-sized, never
     corpus-sized)."""
     sys.path.insert(0, _repo_root())
-    from mini_hadoop_spark.session import get_spark
+    from mini_hadoop_spark.session import clear, get_spark
 
     spark = get_spark("scale-smoke-classifier")
     spark.sparkContext.setLogLevel("ERROR")
@@ -1249,7 +1247,7 @@ def classifier_family_mode(n: int) -> int:
     from mini_hadoop_spark.operators import classifier
 
     def cold_run(sf_dir: str) -> dict:
-        classifier.clear_memo()
+        clear()
         t0 = time.perf_counter()
         stats, w = classifier._train(spark, sf_dir)
         t = time.perf_counter() - t0
@@ -1576,7 +1574,7 @@ def budget_family_mode(n: int) -> int:
     — a pair ratio tracking the copy factor IS the linearity evidence.
     Reuses the SemDeDup rolled-copy corpus."""
     sys.path.insert(0, _repo_root())
-    from mini_hadoop_spark.session import get_spark
+    from mini_hadoop_spark.session import clear, get_spark
 
     spark = get_spark("scale-smoke-budget")
     spark.sparkContext.setLogLevel("ERROR")
@@ -1594,7 +1592,7 @@ def budget_family_mode(n: int) -> int:
         return int(b * (v.count() - 1))
 
     def cold_run(sf_dir: str) -> dict:
-        similarity.clear_memo()
+        clear()
         out = {}
         for name in (
             "similarity_matryoshka_agreement",
