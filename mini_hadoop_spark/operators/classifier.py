@@ -93,7 +93,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from mini_hadoop_spark.functions.partitioning import spread_small_scan
+from mini_hadoop_spark.functions.partitioning import spread_table
 from mini_hadoop_spark.functions.text import round_half_up, sql_round_half_up, tokens
 from mini_hadoop_spark.operators.sampling import (
     SPLIT_BUCKETS,
@@ -179,7 +179,7 @@ def _doc_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of each running the feature pipeline."""
 
     def build() -> DataFrame:
-        raw = spread_small_scan(load_table(spark, sf_dir, "documents"))
+        raw = spread_table(spark, sf_dir, "documents")
         feats = _doc_buckets(raw)
         # content-hash split (sampling.split_label — the SAME 80/10/10
         # md5(text) rule the split operators register), so the holdout

@@ -41,11 +41,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from mini_hadoop_spark.functions.partitioning import spread_small_scan
+from mini_hadoop_spark.functions.partitioning import spread_table
 from mini_hadoop_spark.functions.text import round_half_up, sql_round_half_up, tokens
 from mini_hadoop_spark.functions.vectors import as_double, dot
 from mini_hadoop_spark.session import build_once
-from mini_hadoop_spark.sources.catalog import load_table
 
 BPE_TOP_MERGES = 20
 
@@ -60,7 +59,7 @@ def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ties break on the pair string so the cutoff is engine-stable.
 
     Output: (pair, cnt)."""
-    d = spread_small_scan(load_table(spark, sf_dir, "documents"))
+    d = spread_table(spark, sf_dir, "documents")
     tok = d.select(F.explode(tokens("text")).alias("tok")).where(F.length("tok") >= 2)
     pairs = tok.select(
         F.explode(
@@ -147,7 +146,7 @@ def _bpe_vocab_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches the corpus; plan-guarded in tests/test_plan_guards.py),
     bounded by the BPE_VOCAB_MIN_COUNT frequency floor before anything
     reaches the driver."""
-    d = spread_small_scan(load_table(spark, sf_dir, "documents"))
+    d = spread_table(spark, sf_dir, "documents")
     return (
         d.select(F.explode(tokens("text")).alias("tok"))
         .groupBy("tok")
@@ -368,7 +367,7 @@ def bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("ms")
         )
     )
-    d = spread_small_scan(load_table(spark, sf_dir, "documents"))
+    d = spread_table(spark, sf_dir, "documents")
     s0 = F.regexp_replace(
         F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", "|"),
         "([a-z0-9])",
@@ -458,7 +457,7 @@ def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("ms")
         )
     )
-    d = spread_small_scan(load_table(spark, sf_dir, "documents"))
+    d = spread_table(spark, sf_dir, "documents")
     s0 = F.regexp_replace(
         F.regexp_replace(F.lower(F.col("text")), "[^a-z0-9]+", "|"),
         "([a-z0-9])",
@@ -541,7 +540,7 @@ def quantize_embeddings_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstruction error (MSE + max abs error, 9-decimal rounded).
 
     Zero-vector guard: scale 0 -> q all zeros, zero error."""
-    emb = spread_small_scan(load_table(spark, sf_dir, "embeddings"))
+    emb = spread_table(spark, sf_dir, "embeddings")
     d = emb.select("vec_id", as_double("embedding").alias("e"))
     max_abs = F.array_max(F.transform(F.col("e"), lambda x: F.abs(x)))
     d = d.withColumn("scale", max_abs / F.lit(float(QUANT_LEVELS)))
@@ -693,7 +692,7 @@ def pq_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     order-independent fixed-point mean."""
 
     def build() -> DataFrame:
-        emb = spread_small_scan(load_table(spark, sf_dir, "embeddings"))
+        emb = spread_table(spark, sf_dir, "embeddings")
         v = emb.select("vec_id", as_double("embedding").alias("e"))
         sub = pq_subvectors(v)
         seeds = (
@@ -727,7 +726,7 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the refined codebook."""
 
     def build() -> DataFrame:
-        emb = spread_small_scan(load_table(spark, sf_dir, "embeddings"))
+        emb = spread_table(spark, sf_dir, "embeddings")
         v = emb.select("vec_id", as_double("embedding").alias("e"))
         sub = pq_subvectors(v)
         return (

@@ -44,9 +44,9 @@ from mini_hadoop_spark.functions.text import (
     sql_round_half_up,
     tokens,
 )
-from mini_hadoop_spark.functions.partitioning import spread_small_scan
+from mini_hadoop_spark.functions.partitioning import spread_table
 from mini_hadoop_spark.functions.vectors import cosine, dot
-from mini_hadoop_spark.session import build_once
+from mini_hadoop_spark.session import build_once, release
 from mini_hadoop_spark.sources.catalog import load_table
 
 # Near-dup output threshold: sf0.01 has 25 planted near-dup pairs with
@@ -95,7 +95,7 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     itemized index build, like the materialization itself."""
 
     def build() -> DataFrame:
-        docs = spread_small_scan(load_table(spark, sf_dir, "documents"))
+        docs = spread_table(spark, sf_dir, "documents")
         return (
             docs.select("doc_id", tokens("text").alias("t"))
             .select("doc_id", shingles("t").alias("sharr"))
@@ -598,7 +598,7 @@ def dedup_span_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     (collisions, were any to occur, affect both engines equally).
     Everything after the gram agg is bounded by duplicated-position
     counts."""
-    d = spread_small_scan(load_table(spark, sf_dir, "documents"))
+    d = spread_table(spark, sf_dir, "documents")
     t = tokens("text")
     gram_structs = F.when(
         F.size(t) >= F.lit(SPAN_K),
@@ -1067,9 +1067,18 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized per (session, sf_dir) — the same build-once index
     policy as the MinHash family (bench itemizes the build as
     index_build.pairs_simhash)."""
+    return _simhash_pairs(spark, sf_dir, "simhash", F.xxhash64(F.col("token")), SIMHASH_BITS)
+
+
+def _simhash_pairs(
+    spark: SparkSession, sf_dir: str, variant: str, token_hash: Column, num_bits: int
+) -> DataFrame:
+    """The SimHash near-dup pair set under per-token hash ``token_hash``
+    (``num_bits`` wide), built once per (session, corpus) under
+    ``("near_dup_pairs", variant)``."""
 
     def build() -> DataFrame:
-        docs = spread_small_scan(load_table(spark, sf_dir, "documents"))
+        docs = spread_table(spark, sf_dir, "documents")
         # token INSTANCES with cnt=1, not a pre-counted (doc, token) frame:
         # sum_instances(±1) == sum_distinct(cnt·±1), so skipping the
         # (doc_id, token) count drops a full shuffle of the token stream —
@@ -1078,15 +1087,18 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         toks = (
             docs.select("doc_id", F.explode(tokens("text")).alias("token"))
             .withColumn("cnt", F.lit(1).cast("long"))
+            .withColumn("h", token_hash)
         )
         # materialize the (doc_id, simhash) table before the block self-join:
         # both join sides otherwise re-run the whole tokenize+64-weight
         # fingerprint pipeline (the same build-the-index-once pattern as the
         # LSH/IVF/shingle indexes; |docs| rows of 2 longs)
-        fp = simhash(toks).localCheckpoint(eager=False)
-        return _simhash_block_pairs(fp, SIMHASH_BITS).localCheckpoint(eager=True)
+        fp = simhash(toks, num_bits=num_bits, h_col="h").localCheckpoint(eager=False)
+        pairs = _simhash_block_pairs(fp, num_bits).localCheckpoint(eager=True)
+        release(fp)
+        return pairs
 
-    return build_once(spark, sf_dir, ("near_dup_pairs", "simhash"), build)
+    return build_once(spark, sf_dir, ("near_dup_pairs", variant), build)
 
 
 def _simhash_block_pairs(fp: DataFrame, num_bits: int) -> DataFrame:
@@ -1145,20 +1157,8 @@ def dedup_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes): identical plan shape to ``dedup_simhash`` — SWAR-packed
     majority aggregate, block-pigeonhole candidates, exact Hamming.
     Memoized + materialized per (session, sf_dir) like its sibling."""
-
-    def build() -> DataFrame:
-        docs = spread_small_scan(load_table(spark, sf_dir, "documents"))
-        toks = (
-            docs.select("doc_id", F.explode(tokens("text")).alias("token"))
-            .withColumn("cnt", F.lit(1).cast("long"))
-            .withColumn(
-                "hm", F.conv(F.substring(F.md5(F.col("token")), 1, 15), 16, 10).cast("long")
-            )
-        )
-        fp = simhash(toks, num_bits=SIMHASH_MD5_BITS, h_col="hm").localCheckpoint(eager=False)
-        return _simhash_block_pairs(fp, SIMHASH_MD5_BITS).localCheckpoint(eager=True)
-
-    return build_once(spark, sf_dir, ("near_dup_pairs", "simhash_md5"), build)
+    md5_hash = F.conv(F.substring(F.md5(F.col("token")), 1, 15), 16, 10).cast("long")
+    return _simhash_pairs(spark, sf_dir, "simhash_md5", md5_hash, SIMHASH_MD5_BITS)
 
 
 def _simhash_md5_sql() -> str:
@@ -1503,7 +1503,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     never changes, so the guard's two tiny jobs run once, not per
     invocation; dropped by ``session.clear`` like every other
     session-scoped artifact."""
-    emb = spread_small_scan(load_table(spark, sf_dir, "embeddings"))
+    emb = spread_table(spark, sf_dir, "embeddings")
     v = emb.select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
     estimate = build_once(
         spark,
@@ -1574,9 +1574,7 @@ def connected_components(
 # session clamp and behaves exactly as before.
 _CC_EDGES_PER_PARTITION = 200_000
 
-#: serializes the conf save/set/restore below (r15 code review + DESIGN
-#: lesson 41): the target is PER-GRAPH, so it cannot be shared by a
-#: refcount the way streaming._drain_scope's constant can — two
+#: serializes the conf save/set/restore below (DESIGN lesson 41): two
 #: concurrent CC builds interleaving restores would leak a clamped
 #: value into the session and distort every later plan.  The lock makes
 #: any caller safe; bench additionally keeps the label builds
@@ -1672,18 +1670,18 @@ def _cc_hashmin(edges: DataFrame, src: str, dst: str, max_iter: int) -> DataFram
         else:
             new_labels = new_labels.persist()
         new_sum = new_labels.agg(_wit).first()[0]
-        labels.unpersist()
+        release(labels)
         labels = new_labels
         if new_sum == prev_sum:
             converged = True
             break
         prev_sum = new_sum
     if not converged:
-        labels.unpersist()
+        release(labels)
         und.unpersist()
         raise RuntimeError(f"connected_components did not converge in {max_iter} hops")
     result = labels.localCheckpoint(eager=True)
-    labels.unpersist()
+    release(labels)
     und.unpersist()
     return result
 
@@ -1761,14 +1759,14 @@ def _cc_two_phase(edges: DataFrame, src: str, dst: str, max_iter: int) -> DataFr
         # the witness agg below, which doubles as the cache-fill action.
         new_e = rewired.unionAll(anchors).distinct().localCheckpoint(eager=False)
         cur = new_e.agg(*_wit).first()  # fills the checkpoint
-        e.unpersist()
+        release(e)
         e = new_e
         if (cur["cnt"], cur["s"]) == (prev["cnt"], prev["s"]):
             converged = True
             break
         prev = cur
     if not converged:
-        e.unpersist()
+        release(e)
         verts.unpersist()
         raise RuntimeError(f"two-phase CC did not converge in {max_iter} rounds")
     # star forest: non-roots are the b side (label = a); everything else
@@ -1781,7 +1779,7 @@ def _cc_two_phase(edges: DataFrame, src: str, dst: str, max_iter: int) -> DataFr
         .select("id", F.coalesce("root", "id").alias("label"))
         .localCheckpoint(eager=True)
     )
-    e.unpersist()
+    release(e)
     verts.unpersist()
     return labels
 
@@ -1914,7 +1912,7 @@ def contamination_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped nothing this projection keeps.  That kills one full
     tokenize+shingle pass over the train corpus, its doc_id-keyed
     shuffle, and the join."""
-    docs = spread_small_scan(load_table(spark, sf_dir, "documents"))
+    docs = spread_table(spark, sf_dir, "documents")
     base = docs.select("doc_id", tokens("text").alias("t")).select(
         "doc_id", shingles("t", CONTAM_K).alias("sharr")
     )

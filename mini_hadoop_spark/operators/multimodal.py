@@ -43,7 +43,7 @@ from typing import TYPE_CHECKING
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from mini_hadoop_spark.functions.partitioning import spread_small_scan
+from mini_hadoop_spark.functions.partitioning import spread_table
 from mini_hadoop_spark.functions.text import round_half_up, sql_round_half_up
 from mini_hadoop_spark.sources.catalog import load_table
 
@@ -68,9 +68,7 @@ def synth_binary_docs(spark: SparkSession, sf_dir: str, spread: bool = True) -> 
     pyarrow import) PER PARTITION.  On a small local input that spawn
     storm dominates the query several-fold; at 100 TB the scan has
     hundreds of natural splits and either setting is identical."""
-    d = load_table(spark, sf_dir, "documents")
-    if spread:
-        d = spread_small_scan(d)
+    d = (spread_table if spread else load_table)(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         F.when(F.col("doc_id") % 3 == 0, "image")

@@ -45,14 +45,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from mini_hadoop_spark.functions.partitioning import spread_small_scan
+from mini_hadoop_spark.functions.partitioning import spread_table
 from mini_hadoop_spark.functions.text import (
     round_half_up,
     shingles,
     sql_round_half_up,
     tokens,
 )
-from mini_hadoop_spark.sources.catalog import load_table
 
 # Fixed query-term set: frequent corpus tokens so every term has a
 # non-trivial posting list at every SF.  A user-supplied query would be
@@ -70,7 +69,7 @@ _ONE_MINUS_B = repr(1.0 - BM25_B)
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spread_small_scan(load_table(spark, sf_dir, "documents"))
+    return spread_table(spark, sf_dir, "documents")
 
 
 def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -36,7 +36,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions 
 
 from mini_hadoop_spark.functions.text import round_half_up, sql_round_half_up
 from mini_hadoop_spark.functions.vectors import as_double, dot, norm
-from mini_hadoop_spark.functions.partitioning import spread_small_scan
+from mini_hadoop_spark.functions.partitioning import spread_table
 from mini_hadoop_spark.session import build_once
 from mini_hadoop_spark.sources.catalog import load_table
 
@@ -68,7 +68,7 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dot / query-norm / vector-norm, the exact op order of the oracle's
     dot/sqrt/sqrt — identical IEEE results, ~3x less work on pair-heavy
     plans; the same hoist embedding_dup_pairs already uses)."""
-    emb = spread_small_scan(load_table(spark, sf_dir, "embeddings"))
+    emb = spread_table(spark, sf_dir, "embeddings")
     return emb.select("vec_id", "label", as_double("embedding").alias("e")).withColumn(
         "nv", norm(F.col("e"))
     )
@@ -1188,7 +1188,7 @@ def embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side partial agg collapses every partition to ≤|dims| rows
     before the shuffle — shuffle volume is dims × partitions tiny rows,
     independent of corpus size."""
-    emb = spread_small_scan(load_table(spark, sf_dir, "embeddings"))
+    emb = spread_table(spark, sf_dir, "embeddings")
     d = emb.select(F.posexplode("embedding").alias("dim", "v"))
     return d.groupBy("dim").agg(
         F.min("v").alias("min_v"),
@@ -1335,7 +1335,7 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: one posexplode + one (label, dim) hash aggregate, map-side
     combined — output is |labels|×|dims| rows, corpus-size-independent."""
-    emb = spread_small_scan(load_table(spark, sf_dir, "embeddings"))
+    emb = spread_table(spark, sf_dir, "embeddings")
     d = emb.select("label", F.posexplode("embedding").alias("dim", "v"))
     term = (F.floor(F.col("v").cast("double") * F.lit(1e6) + F.lit(0.5)) / F.lit(1e6)).cast(
         "decimal(18,6)"
@@ -1385,7 +1385,7 @@ def centroid_classify_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     r7 _assign/PQ idiom; previously a crossJoin fanout + row_number
     window that shuffled |v| x |labels| rows carrying the vectors);
     the final agg is |labels| rows."""
-    emb = spread_small_scan(load_table(spark, sf_dir, "embeddings"))
+    emb = spread_table(spark, sf_dir, "embeddings")
     cents = (
         embedding_label_centroids(spark, sf_dir)
         .groupBy(F.col("label").alias("cent_label"))

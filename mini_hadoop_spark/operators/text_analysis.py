@@ -41,7 +41,7 @@ from mini_hadoop_spark.functions.text import (
     sql_round_half_up,
     tokens,
 )
-from mini_hadoop_spark.functions.partitioning import spread_small_scan
+from mini_hadoop_spark.functions.partitioning import spread_small_scan, spread_table
 from mini_hadoop_spark.sources.catalog import load_table
 
 # Explicit whitespace class for every regex shared with the DuckDB
@@ -68,7 +68,7 @@ LANG_MARKERS = {
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # regex-heavy per-row expressions: spread a single-file scan across
     # cores (no-op at scale — see functions/partitioning.py)
-    return spread_small_scan(load_table(spark, sf_dir, "documents"))
+    return spread_table(spark, sf_dir, "documents")
 
 
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

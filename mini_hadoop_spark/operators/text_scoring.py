@@ -37,14 +37,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
-from mini_hadoop_spark.functions.partitioning import spread_small_scan
+from mini_hadoop_spark.functions.partitioning import spread_table
 from mini_hadoop_spark.functions.text import round_half_up, sql_round_half_up, tokens
 from mini_hadoop_spark.operators.text_analysis import STOPWORDS, WS
-from mini_hadoop_spark.sources.catalog import load_table
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spread_small_scan(load_table(spark, sf_dir, "documents"))
+    return spread_table(spark, sf_dir, "documents")
 
 
 _STOP_IN = ", ".join(f"'{s}'" for s in STOPWORDS)

@@ -106,22 +106,30 @@ def build_once(spark: SparkSession, sf_dir: str, name, build: Callable):
         return _memo[key]
 
 
+def release(df: DataFrame) -> None:
+    """Free what ``df`` holds: its cache entry and, when its analyzed
+    plan's top node is a ``LogicalRDD`` (a localCheckpoint), the
+    checkpoint RDD's blocks, which ``Dataset.unpersist()`` leaves alone.
+    Only the top node counts: a leaf further down can be another
+    artifact's checkpoint.  The blocks go without waiting, so nothing
+    may read ``df`` afterwards."""
+    try:
+        df.unpersist()
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            plan.rdd().unpersist(False)
+    except Py4JError:
+        pass  # a stopped session has already freed the blocks
+
+
 def clear() -> None:
     """Drop every build-once artifact, for harnesses that need cold
-    re-runs or rewrite a corpus path in place.  Also frees the blocks of
-    every memoized localCheckpoint: ``Dataset.unpersist()`` only drops
-    CacheManager entries, so the checkpoint RDD, read off the frame's
-    analyzed ``LogicalRDD`` plan, is unpersisted directly."""
+    re-runs or rewrite a corpus path in place, and ``release`` every
+    memoized frame (or frame inside a tuple value)."""
     for value in list(_memo.values()):
         for df in value if isinstance(value, tuple) else (value,):
-            if not isinstance(df, DataFrame):
-                continue
-            try:
-                plan = df._jdf.queryExecution().analyzed()
-                if plan.getClass().getSimpleName() == "LogicalRDD":
-                    plan.rdd().unpersist(False)
-            except Py4JError:
-                pass  # a stopped session has already freed the blocks
+            if isinstance(df, DataFrame):
+                release(df)
     _memo.clear()
     with _key_locks_guard:
         _key_locks.clear()

@@ -37,6 +37,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from mini_hadoop_spark.session import release
+
 IVF_INDEX_SCHEMA = "vec_id bigint, cid bigint"
 
 
@@ -118,6 +120,7 @@ def recenter_ivf_index(
         .localCheckpoint(eager=True)
     )
     new_index.write.mode("overwrite").parquet(index_dir)
+    release(new_index)
     return cent_new
 
 
@@ -159,6 +162,7 @@ def run_incremental_ivf_index(
             eager=True
         )
         new_rows.write.mode("append").parquet(index_dir)
+        release(new_rows)
 
     q = (
         stream.writeStream.foreachBatch(_append_new)

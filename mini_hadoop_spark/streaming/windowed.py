@@ -26,9 +26,9 @@ import contextlib
 import os
 import shutil
 import tempfile
-import threading
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -39,7 +39,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from mini_hadoop_spark.session import build_once
+from mini_hadoop_spark.session import build_once, release
 
 EVENTS_STREAM_SCHEMA = StructType(
     [
@@ -96,13 +96,14 @@ def run_stream_to_memory(
     table_name: str,
     timeout_sec: int = 120,
     output_mode: str = "complete",
-) -> None:
+) -> StreamingQuery:
     """Drain the stream with availableNow into an in-memory table —
-    deterministic end-to-end execution for tests/demos.  ``complete``
-    for watermarked aggregations (state emitted in full); ``append``
-    for joins and pass-through plans.  Raises if the drain does not
-    finish within ``timeout_sec`` (a partially-drained table would
-    otherwise surface as a baffling downstream comparison failure)."""
+    deterministic end-to-end execution for tests/demos — and return the
+    finished query.  ``complete`` for watermarked aggregations (state
+    emitted in full); ``append`` for joins and pass-through plans.
+    Raises if the drain does not finish within ``timeout_sec`` (a
+    partially-drained table would otherwise surface as a baffling
+    downstream comparison failure)."""
     q = (
         stream_df.writeStream.format("memory")
         .queryName(table_name)
@@ -113,71 +114,32 @@ def run_stream_to_memory(
     if not q.awaitTermination(timeout_sec):
         q.stop()
         raise TimeoutError(f"stream drain into {table_name!r} exceeded {timeout_sec}s")
+    return q
 
 
-#: Shuffle-partition count scoped around the registered drains.  Every
+#: Shuffle-partition count of the registered drains' streams.  Every
 #: stateful streaming operator instantiates state stores (and a stream-
 #: stream join FOUR of them) PER shuffle partition PER micro-batch; the
-#: drains' input is ONE staged bounded file, so at the session default of
+#: drains' input is ONE staged bounded file, so at a session default of
 #: 32 partitions store setup dominated the wall clock (hourly drain at
 #: sf0.1: 2.7 s at 32 partitions vs 1.0 s at 4, measured r8).  This is a
 #: LOCAL-HARNESS setting only: a production stream over an unbounded
 #: 100 TB/day source sizes state partitions to the cluster (the default),
-#: which is why the scope restores the session value on exit.
+#: which is why only the drain's own session clone gets it.
 STREAM_DRAIN_PARTITIONS = 4
 
 
-#: _drain_scope is REFCOUNTED (r15): bench builds the ten drains
-#: CONCURRENTLY, and a naive save/set/restore of a session conf from one
-#: thread while another drain is mid-run corrupts that drain's capture
-#: (measured: a concurrently-toggled noDataMicroBatches=false swallowed
-#: the outer join's null-emission batch — wrong rows).  The first
-#: enterer saves+sets, the last exiter restores, every enterer shares
-#: the SAME target value, so any interleaving of drains sees a
-#: consistent conf.  The former no_data_batches=False arm (skip the
-#: trailing no-data micro-batch) is GONE: it was a per-query value and
-#: therefore impossible to share; all of its call sites were
-#: complete-mode or foreachBatch drains where the extra batch is
-#: results-identical (its own docstring said so), so always-on costs
-#: one cheap micro-batch per drain and removes the only conflicting
-#: session toggle.
-_drain_scope_lock = threading.Lock()
-#: per-session refcount state keyed on the SparkSession OBJECT (ADVICE
-#: r15: module-global scalars cross-talked between two concurrent
-#: SparkSessions — an out-of-order exit left one session permanently
-#: clamped to 4 partitions and restored its saved value into the other;
-#: the object key also keeps newSession() clones — same applicationId,
-#: separate SQLConf — independent); value = [depth, saved_conf_value].
-#: Entries are removed when the last drain exits, so no session is
-#: retained beyond its active drains.
-_drain_scope_state: dict = {}
-
-
-@contextlib.contextmanager
-def _drain_scope(spark: SparkSession):
-    """Scope shuffle.partitions down for a single-staged-file drain —
-    concurrency-safe via PER-SESSION refcounting (see the notes above);
-    always restored when the last concurrent drain in that session
-    exits."""
-    key = spark
-    with _drain_scope_lock:
-        st = _drain_scope_state.get(key)
-        if st is None:
-            st = _drain_scope_state[key] = [
-                0,
-                spark.conf.get("spark.sql.shuffle.partitions"),
-            ]
-            spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_DRAIN_PARTITIONS))
-        st[0] += 1
-    try:
-        yield
-    finally:
-        with _drain_scope_lock:
-            st = _drain_scope_state[key]
-            st[0] -= 1
-            if st[0] == 0:
-                spark.conf.set("spark.sql.shuffle.partitions", st[1])
-                del _drain_scope_state[key]
+def _drain_session(spark: SparkSession) -> SparkSession:
+    """A clone of ``spark`` to start one drain's stream in: the caller's
+    runtime confs (UTC, nanosAsLong, ...) carried over, shuffle
+    partitions set to STREAM_DRAIN_PARTITIONS.  The caller's own conf is
+    never written, so concurrent drains and queries need no lock."""
+    clone = spark.newSession()
+    for key, value in spark.conf.getAll.items():
+        if spark.conf.isModifiable(key):
+            clone.conf.set(key, value)
+    clone.conf.set("spark.sql.shuffle.partitions", str(STREAM_DRAIN_PARTITIONS))
+    return clone
 
 
 def _link_or_copy(src: str, dst: str) -> None:
@@ -265,9 +227,11 @@ def streaming_hourly_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         import uuid
 
         table = f"stream_hourly_{uuid.uuid4().hex[:8]}"
-        with _staged_file(sf_dir, "events", "stream_hourly_") as stage, _drain_scope(spark):
-            run_stream_to_memory(windowed_event_counts(read_events_stream(spark, stage)), table)
-        return spark.table(table).select(
+        drain = _drain_session(spark)
+        with _staged_file(sf_dir, "events", "stream_hourly_") as stage:
+            run_stream_to_memory(windowed_event_counts(read_events_stream(drain, stage)), table)
+        # the memory sink's view lives in the session that started it
+        return drain.table(table).select(
             F.date_format("window_start", "yyyy-MM-dd HH:mm:ss").alias("hour_start"),
             "event_type",
             "n_events",
@@ -293,11 +257,12 @@ def streaming_session_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         from mini_hadoop_spark.streaming.stateful import streaming_sessionization
 
         table = f"stream_session_{uuid.uuid4().hex[:8]}"
-        with _staged_file(sf_dir, "events", "stream_session_") as stage, _drain_scope(spark):
+        drain = _drain_session(spark)
+        with _staged_file(sf_dir, "events", "stream_session_") as stage:
             run_stream_to_memory(
-                streaming_sessionization(read_events_stream(spark, stage)), table
+                streaming_sessionization(read_events_stream(drain, stage)), table
             )
-        return spark.table(table).select(
+        return drain.table(table).select(
             "user_id",
             F.date_format("session_start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
             "n_events",
@@ -338,11 +303,7 @@ def streaming_dedup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             _stage_parquet(src, docs_dir)
             index_dir = os.path.join(root, "index")
             ckpt_dir = os.path.join(root, f"ckpt_{uuid.uuid4().hex[:8]}")
-            with _drain_scope(spark):
-                # a trailing no-data batch would run one empty
-                # read-modify-append cycle against the on-disk index — a
-                # wasted parquet commit, identical final index
-                run_incremental_dedup_index(spark, docs_dir, index_dir, ckpt_dir)
+            run_incremental_dedup_index(_drain_session(spark), docs_dir, index_dir, ckpt_dir)
             # materialize before the staging tree is removed
             return (
                 read_index(spark, index_dir)
@@ -404,10 +365,9 @@ def streaming_contamination_drain(spark: SparkSession, sf_dir: str) -> DataFrame
             _stage_parquet(src, docs_dir)
             report_dir = os.path.join(root, "report")
             ckpt_dir = os.path.join(root, f"ckpt_{uuid.uuid4().hex[:8]}")
-            with _drain_scope(spark):
-                run_streaming_contamination(
-                    spark, docs_dir, eval_sh, report_dir, ckpt_dir
-                )
+            run_streaming_contamination(
+                _drain_session(spark), docs_dir, eval_sh, report_dir, ckpt_dir
+            )
             return spark.read.parquet(report_dir).localCheckpoint(eager=True)
         finally:
             shutil.rmtree(root, ignore_errors=True)
@@ -449,10 +409,9 @@ def streaming_classifier_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             _stage_parquet(src, docs_dir)
             report_dir = os.path.join(root, "report")
             ckpt_dir = os.path.join(root, f"ckpt_{uuid.uuid4().hex[:8]}")
-            with _drain_scope(spark):
-                run_streaming_classifier_scores(
-                    spark, docs_dir, w, report_dir, ckpt_dir
-                )
+            run_streaming_classifier_scores(
+                _drain_session(spark), docs_dir, w, report_dir, ckpt_dir
+            )
             return spark.read.parquet(report_dir).localCheckpoint(eager=True)
         finally:
             shutil.rmtree(root, ignore_errors=True)
@@ -502,10 +461,9 @@ def streaming_pit_enrich_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             _stage_parquet(src, facts_dir)
             report_dir = os.path.join(root, "report")
             ckpt_dir = os.path.join(root, f"ckpt_{uuid.uuid4().hex[:8]}")
-            with _drain_scope(spark):
-                run_streaming_pit_enrich(
-                    spark, facts_dir, order_keys, versions, report_dir, ckpt_dir
-                )
+            run_streaming_pit_enrich(
+                _drain_session(spark), facts_dir, order_keys, versions, report_dir, ckpt_dir
+            )
             return spark.read.parquet(report_dir).localCheckpoint(eager=True)
         finally:
             shutil.rmtree(root, ignore_errors=True)
@@ -559,13 +517,14 @@ def _outer_join_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         table = f"stream_ojoin_{uuid.uuid4().hex[:8]}"
-        with _staged_file(sf_dir, "events", "stream_ojoin_") as stage, _drain_scope(spark):
+        drain = _drain_session(spark)
+        with _staged_file(sf_dir, "events", "stream_ojoin_") as stage:
             run_stream_to_memory(
-                clicks_with_errors_outer(read_events_stream(spark, stage)),
+                clicks_with_errors_outer(read_events_stream(drain, stage)),
                 table,
                 output_mode="append",
             )
-        return spark.table(table).localCheckpoint(eager=True)
+        return drain.table(table).localCheckpoint(eager=True)
 
     return build_once(spark, sf_dir, "outer_join_drain", build)
 
@@ -599,8 +558,8 @@ def streaming_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming run per session) restricted to its matched rows — exact
     by construction, and the independent inner-join oracle still gates
     it.  A stream-stream join instantiates FOUR state stores per
-    shuffle partition per micro-batch, so the shared run keeps
-    _drain_scope."""
+    shuffle partition per micro-batch, so the shared run starts in a
+    _drain_session clone."""
     return _format_join_result(
         _outer_join_drained(spark, sf_dir).filter(F.col("error_id").isNotNull())
     )
@@ -625,10 +584,11 @@ def streaming_enrich_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         from mini_hadoop_spark.streaming.joins import stream_static_enrich
 
         table = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-        with _staged_file(sf_dir, "events", "stream_enrich_") as stage, _drain_scope(spark):
+        drain = _drain_session(spark)
+        with _staged_file(sf_dir, "events", "stream_enrich_") as stage:
             dim = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
             enriched = stream_static_enrich(
-                read_events_stream(spark, stage), dim, "user_id", "c_custkey", how="inner"
+                read_events_stream(drain, stage), dim, "user_id", "c_custkey", how="inner"
             )
             # Fixed-point discipline: sum floor(value*1e4 + 0.5) as integers
             # (order-independent, exact), divide once at the end — a raw
@@ -642,7 +602,7 @@ def streaming_enrich_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             )
             run_stream_to_memory(agg, table, output_mode="complete")
-        return spark.table(table).select(
+        return drain.table(table).select(
             F.col("c_mktsegment").alias("mktsegment"),
             "event_type",
             "n_events",
@@ -701,11 +661,12 @@ def _ivf_stream_drained(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Da
             _stage_parquet(src, emb_dir)
             index_dir = os.path.join(root, "index")
             ckpt_dir = os.path.join(root, f"ckpt_{uuid.uuid4().hex[:8]}")
-            with _drain_scope(spark):
-                run_incremental_ivf_index(spark, emb_dir, centroids, index_dir, ckpt_dir)
+            run_incremental_ivf_index(
+                _drain_session(spark), emb_dir, centroids, index_dir, ckpt_dir
+            )
             # materialize each snapshot before the staging tree is removed
             pre = read_ivf_index(spark, index_dir).localCheckpoint(eager=True)
-            recenter_ivf_index(spark, emb_dir, index_dir)
+            release(recenter_ivf_index(spark, emb_dir, index_dir))
             post = read_ivf_index(spark, index_dir).localCheckpoint(eager=True)
         finally:
             shutil.rmtree(root, ignore_errors=True)

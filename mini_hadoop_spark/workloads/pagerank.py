@@ -52,6 +52,8 @@ import math
 from pyspark.sql import DataFrame, Observation, functions as F
 from pyspark.storagelevel import StorageLevel
 
+from mini_hadoop_spark.session import release
+
 
 def pagerank(
     edges: DataFrame,
@@ -237,6 +239,18 @@ def pagerank_fixed_point(
     tol9: int = 50_000_000,
     max_iters: int = 12,
 ) -> tuple[DataFrame, int]:
+    """``fixed_point_ranks`` projected to ``((page, rank9),
+    stop_iteration)``."""
+    ranks, k = fixed_point_ranks(edges, damping, tol9, max_iters)
+    return ranks.select("page", "rank9"), k
+
+
+def fixed_point_ranks(
+    edges: DataFrame,
+    damping: float = 0.85,
+    tol9: int = 50_000_000,
+    max_iters: int = 12,
+) -> tuple[DataFrame, int]:
     """Loop-until-converged PageRank with INTEGER fixed-point ranks —
     the reference's iteration driver + convergence check
     (mini_hadoop.ex:53-73 threads ranks between jobs; README's
@@ -265,8 +279,11 @@ def pagerank_fixed_point(
     + one hash aggregate; the out-degree table and the (edge ⋈
     out-degree) fact are materialized once before the loop; each
     frontier localCheckpoints (truncated lineage) and the convergence
-    test is observed on that checkpoint's job (module docstring).
-    Returns ``((page, rank9), stop_iteration)``.
+    test is observed on that checkpoint's job (module docstring).  Each
+    superseded frontier and, after the loop, the two pre-loop
+    checkpoints are released.  Returns the final frontier's checkpoint
+    (``page``, ``rank9`` and, past round 1, the previous ``p9``) and the
+    stop iteration.
     """
     # The edge scan is read twice, both times before the loop: the
     # out-degree table and the (edge ⋈ out-degree) fact are
@@ -286,6 +303,8 @@ def pagerank_fixed_point(
         # (page, rank9) frame instead of dividing by zero in the
         # teleport term (the oracle's WHERE-filtered unions are empty
         # too, so both engines emit zero rows)
+        release(out_deg)
+        release(ej)
         empty = edges.sparkSession.createDataFrame([], "page bigint, rank9 bigint")
         return empty, 0
     # literal op order matches the oracle: 0.15 / n * 1e9 + 0.5
@@ -328,7 +347,12 @@ def pagerank_fixed_point(
     for k in range(2, max_iters + 1):
         cur, delta = step(prev)
         d = delta.get
+        release(prev)
         prev = cur
         if d["s"] < tol9 * d["c"]:
-            return cur.select("page", "rank9"), k
-    return prev.select("page", "rank9"), max_iters
+            break
+    else:
+        k = max_iters
+    release(out_deg)
+    release(ej)
+    return prev, k

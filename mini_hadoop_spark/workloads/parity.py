@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from mini_hadoop_spark.session import build_once
 from mini_hadoop_spark.sources.catalog import load_table
-from mini_hadoop_spark.workloads.pagerank import pagerank, pagerank_fixed_point
+from mini_hadoop_spark.workloads.pagerank import fixed_point_ranks, pagerank
 from mini_hadoop_spark.workloads.wordcount import word_count, word_count_strict
 
 PAGERANK_DAMPING = 0.85
@@ -250,12 +250,13 @@ def pagerank_converged_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank iterated UNTIL CONVERGED (d=0.85, integer fixed-point
     ranks, mean-|Δ| stop rule) — (page, rank_fp9, iters).  Memoized per
     (session, corpus): the converged rank vector is a build-once
-    artifact like the ANN indexes."""
+    artifact like the ANN indexes, memoized as the loop's own final
+    checkpoint so ``session.clear()`` frees it."""
     ranks, iters = build_once(
         spark,
         sf_dir,
         "pagerank_converged",
-        lambda: pagerank_fixed_point(
+        lambda: fixed_point_ranks(
             _lineitem_edges(spark, sf_dir),
             damping=PAGERANK_DAMPING,
             tol9=PAGERANK_CONV_TOL9,

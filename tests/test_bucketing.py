@@ -1,54 +1,9 @@
-"""Bucketing + skew-operator tests: physical-plan assertions (the
-bucketed join must be Exchange-free) and result-invariance of the
-salted plans against their unsalted twins."""
+"""Skew-operator tests: result-invariance of the salted plans against
+their unsalted twins."""
 
 from __future__ import annotations
 
-import io
-import contextlib
-import uuid
-
 from tests.conftest import SF_DIR
-
-
-def _physical_plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    from mini_hadoop_spark.sources.bucketing import bucketed_join, write_bucketed
-    from mini_hadoop_spark.sources.catalog import load_table
-
-    tag = uuid.uuid4().hex[:8]
-    lt, rt = f"b_orders_{tag}", f"b_lineitem_{tag}"
-    orders = load_table(spark, SF_DIR, "orders").select("o_orderkey", "o_orderdate")
-    lineitem = load_table(spark, SF_DIR, "lineitem").select(
-        "l_orderkey", "l_quantity"
-    ).withColumnRenamed("l_orderkey", "o_orderkey")
-    write_bucketed(orders, lt, "o_orderkey", 8, path=str(tmp_path / lt))
-    write_bucketed(lineitem, rt, "o_orderkey", 8, path=str(tmp_path / rt))
-    # at sf0.01 both sides fit the broadcast threshold, which would
-    # bypass the bucketed path entirely; disable broadcast to expose the
-    # SortMergeJoin that bucketing makes Exchange-free (at 100 TB
-    # neither side broadcasts and this IS the plan)
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, lt, rt, "o_orderkey")
-        plan = _physical_plan(joined)
-        assert "SortMergeJoin" in plan, plan
-        assert "Exchange" not in plan, f"bucketed join should not shuffle:\n{plan}"
-        # and it still computes the right thing
-        n = joined.count()
-        want = orders.join(lineitem, "o_orderkey").count()
-        assert n == want
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql(f"DROP TABLE IF EXISTS {lt}")
-        spark.sql(f"DROP TABLE IF EXISTS {rt}")
 
 
 def test_salted_agg_matches_plain(spark):

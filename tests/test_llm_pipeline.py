@@ -587,6 +587,23 @@ def test_connected_components_long_chain_exercises_checkpoint(spark):
     assert got == {i: 1 for i in range(1, n + 1)}
 
 
+@pytest.mark.parametrize("algorithm", ["hashmin", "two-phase"])
+def test_connected_components_keeps_only_its_result_checkpoint(spark, algorithm):
+    """The CC loops release every superseded frontier, lazy checkpoints
+    included: afterwards the only RDD the call left persisted is the
+    one behind its returned labels."""
+    from mini_hadoop_spark.operators.dedup import connected_components
+    from tests.conftest import checkpoint_rdd_id, persistent_rdd_ids
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 13)], "doc_a long, doc_b long"
+    )
+    before = persistent_rdd_ids(spark)
+    labels = connected_components(chain, "doc_a", "doc_b", algorithm=algorithm)
+    assert persistent_rdd_ids(spark) - before == {checkpoint_rdd_id(labels)}
+    assert {r.label for r in labels.collect()} == {1}
+
+
 def test_two_phase_cc_converges_where_hashmin_cannot(spark):
     """A 60-vertex chain has diameter 59: HashMin needs ~59 propagation
     rounds and must raise at max_iter=12, while the two-phase large-star/

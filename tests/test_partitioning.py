@@ -1,12 +1,13 @@
 """spread_small_scan edge cases (VERDICT r17 #5/#9): the helper is
-generic, so it must not blow up on column types xxhash64 rejects, and
-its plan memo must stay bounded."""
+generic, so it must not blow up on column types xxhash64 rejects; and
+spread_table's memo is the session's build-once memo."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from mini_hadoop_spark.functions import partitioning as P
+from tests.conftest import SF_DIR
 
 
 def test_spread_skips_map_type_columns(spark):
@@ -33,15 +34,17 @@ def test_spread_all_unhashable_falls_back_to_round_robin(spark):
     assert out.count() == 16
 
 
-def test_spread_memo_capped(spark, monkeypatch):
-    monkeypatch.setattr(P, "_SPREAD_MEMO_CAP", 4)
-    P._spread_memo.clear()
-    try:
-        for i in range(10):
-            P.spread_small_scan(spark.range(0, 1, 1, 1).select(F.col("id") + i))
-        assert len(P._spread_memo) <= 4
-    finally:
-        P._spread_memo.clear()
+def test_spread_table_built_once_per_session_memo(spark):
+    """spread_table goes through build_once: repeat calls return the same
+    frame, and clear() drops it with every other artifact."""
+    from mini_hadoop_spark.session import clear
+
+    first = P.spread_table(spark, SF_DIR, "documents")
+    assert P.spread_table(spark, SF_DIR, "documents") is first
+    clear()
+    fresh = P.spread_table(spark, SF_DIR, "documents")
+    assert fresh is not first
+    assert P.spread_table(spark, SF_DIR, "documents") is fresh
 
 
 def test_spread_noop_when_enough_partitions(spark):

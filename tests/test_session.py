@@ -15,8 +15,9 @@ from mini_hadoop_spark.session import (
     clear,
     default_driver_memory,
     physical_memory_bytes,
+    release,
 )
-from tests.conftest import SF_DIR, persistent_rdd_ids
+from tests.conftest import SF_DIR, checkpoint_rdd_id, persistent_rdd_ids
 
 
 def test_default_driver_heap_is_below_physical_ram():
@@ -39,6 +40,37 @@ def test_clear_frees_checkpoint_blocks_of_every_artifact(spark):
     assert persistent_rdd_ids(spark) - before
     clear()
     assert not persistent_rdd_ids(spark) - before
+
+
+@pytest.mark.parametrize("build", ["pagerank_converged", "ivf_stream_drain"])
+def test_clear_returns_the_rdd_registry_to_its_base(spark, build):
+    """Builds that checkpoint in a loop or a streaming sink free every
+    intermediate they own, and their memoized result is a checkpoint
+    clear() can see: after clear() no RDD the build persisted is left."""
+    from mini_hadoop_spark.streaming.windowed import _ivf_stream_drained
+    from mini_hadoop_spark.workloads.parity import pagerank_converged_query
+
+    run = {
+        "pagerank_converged": lambda: pagerank_converged_query(spark, SF_DIR).collect(),
+        "ivf_stream_drain": lambda: _ivf_stream_drained(spark, SF_DIR),
+    }[build]
+    clear()
+    before = persistent_rdd_ids(spark)
+    run()
+    assert persistent_rdd_ids(spark) - before
+    clear()
+    assert not persistent_rdd_ids(spark) - before
+
+
+def test_release_frees_only_the_top_checkpoint(spark):
+    """release() frees a checkpoint frame's RDD, but a frame that merely
+    reads a checkpoint (a projection over it) leaves that RDD alone."""
+    ckpt = spark.range(8).localCheckpoint(eager=True)
+    rdd_id = checkpoint_rdd_id(ckpt)
+    release(ckpt.select((ckpt.id + 1).alias("x")))
+    assert rdd_id in persistent_rdd_ids(spark)
+    release(ckpt)
+    assert rdd_id not in persistent_rdd_ids(spark)
 
 
 def test_concurrent_misses_share_one_build(spark):

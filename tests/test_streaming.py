@@ -309,56 +309,6 @@ def test_stream_clean_pipeline_matches_batch(spark, docs_dir):
     assert got == want and len(got) > 0
 
 
-def test_streaming_lsh_near_dup_matches_batch(spark, tmp_path):
-    """Incremental MinHash-LSH near-dup: the streamed candidate-pair set
-    (after consumer-side dedupe) must EQUAL the batch LSH operator's
-    pairs on the same corpus — including across MULTIPLE micro-batches
-    (maxFilesPerTrigger=1 forces per-file batches, so cross-batch pairs
-    only exist if bucket state persists)."""
-    from pyspark.sql import functions as F
-
-    from mini_hadoop_spark.operators import dedup
-    from mini_hadoop_spark.session import clear
-    from mini_hadoop_spark.streaming.documents import DOCS_STREAM_SCHEMA
-    from mini_hadoop_spark.streaming.lsh_dedup import streaming_near_dup_pairs
-    from mini_hadoop_spark.streaming.windowed import run_stream_to_memory
-
-    # split the corpus into two file shards: near-dup pairs at sf0.001
-    # span doc_ids, so some pairs cross the shard boundary
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    d = tmp_path / "shards"
-    d.mkdir()
-    docs.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(str(d / "s0"))
-    docs.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(str(d / "s1"))
-    staged = tmp_path / "in"
-    staged.mkdir()
-    import glob as _glob
-
-    for i, part in enumerate(
-        sorted(_glob.glob(str(d / "s*" / "*.parquet")))
-    ):
-        shutil.copy(part, staged / f"shard-{i}.parquet")
-
-    stream = (
-        spark.readStream.schema(DOCS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(staged))
-    )
-    table = f"lsh_pairs_{uuid.uuid4().hex[:8]}"
-    run_stream_to_memory(streaming_near_dup_pairs(stream), table, output_mode="append")
-    got = {
-        (r.doc_a, r.doc_b, r.est_jaccard)
-        for r in spark.table(table).dropDuplicates(["doc_a", "doc_b"]).collect()
-    }
-
-    clear()
-    want = {
-        (r.doc_a, r.doc_b, r.est_jaccard)
-        for r in dedup.near_dup_pairs(spark, SF_DIR, "minhash").collect()
-    }
-    assert got == want and len(want) > 0
-
-
 def test_stream_static_enrich_matches_batch(spark, events_dir):
     """Stream enriched with a static dimension (events ⟕ customer
     segment) must equal the batch join over the same closed input;
@@ -915,54 +865,71 @@ def test_streaming_classifier_scores_match_batch_across_shards(spark, tmp_path):
     assert score_rows() == {**rows, 5: (1, True)}
 
 
-def test_drain_scope_is_per_session(spark):
-    """ADVICE r15: two concurrent sessions draining must not cross-talk —
-    the refcount state is keyed on the SparkSession object, so an
-    out-of-order exit restores each session's OWN saved value and never
-    leaves the other clamped to STREAM_DRAIN_PARTITIONS."""
-    from mini_hadoop_spark.streaming.windowed import (
-        STREAM_DRAIN_PARTITIONS,
-        _drain_scope,
-    )
+def test_drains_run_in_a_clone_and_never_write_the_callers_conf(spark, monkeypatch):
+    """Two drains built concurrently each start their stream in a clone
+    of the caller's session: the caller's shuffle-partition conf reads
+    its own value throughout, the drained stateful operators run with
+    STREAM_DRAIN_PARTITIONS partitions, and a conf the caller set at
+    runtime carries over into the clone."""
+    import threading
+    import time
 
-    other = spark.newSession()
+    from mini_hadoop_spark.session import clear
+    from mini_hadoop_spark.streaming import windowed as W
+
     key = "spark.sql.shuffle.partitions"
-    saved_a, saved_b = spark.conf.get(key), other.conf.get(key)
-    other.conf.set(key, "17")  # distinct per-session values
+    runtime_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    saved = {k: spark.conf.get(k) for k in (key, runtime_key)}
+    mine = str(W.STREAM_DRAIN_PARTITIONS + 2)
+    state_partitions = []
+    run = W.run_stream_to_memory
+
+    def recording_run(*args, **kwargs):
+        q = run(*args, **kwargs)
+        state_partitions.extend(
+            op["numShufflePartitions"] for op in q.lastProgress["stateOperators"]
+        )
+        return q
+
+    monkeypatch.setattr(W, "run_stream_to_memory", recording_run)
+    seen, errors, done = set(), [], threading.Event()
+
+    def poll():
+        while not done.is_set():
+            seen.add(spark.conf.get(key))
+            time.sleep(0.002)
+
+    def build(drain):
+        try:
+            drain(spark, SF_DIR)
+        except BaseException as exc:  # surfaced by the assert below
+            errors.append(exc)
+
+    spark.conf.set(key, mine)
+    spark.conf.set(runtime_key, "4321")
     try:
-        a = _drain_scope(spark)
-        b = _drain_scope(other)
-        a.__enter__()
-        b.__enter__()
-        assert spark.conf.get(key) == str(STREAM_DRAIN_PARTITIONS)
-        assert other.conf.get(key) == str(STREAM_DRAIN_PARTITIONS)
-        # out-of-order exit: A leaves first; B must stay clamped and
-        # then restore ITS OWN 17, not A's value
-        a.__exit__(None, None, None)
-        assert spark.conf.get(key) == saved_a
-        assert other.conf.get(key) == str(STREAM_DRAIN_PARTITIONS)
-        b.__exit__(None, None, None)
-        assert other.conf.get(key) == "17"
-        assert spark.conf.get(key) == saved_a
+        assert W._drain_session(spark).conf.get(runtime_key) == "4321"
+        clear()
+        poller = threading.Thread(target=poll)
+        poller.start()
+        drains = [
+            threading.Thread(target=build, args=(d,))
+            for d in (W.streaming_hourly_drain, W.streaming_outer_join_drain)
+        ]
+        for t in drains:
+            t.start()
+        for t in drains:
+            t.join()
+        done.set()
+        poller.join()
     finally:
-        spark.conf.set(key, saved_a)
-        other.conf.set(key, saved_b)
-
-
-def test_drain_scope_nested_same_session_refcounts(spark):
-    """Nested scopes in ONE session: only the last exit restores."""
-    from mini_hadoop_spark.streaming.windowed import (
-        STREAM_DRAIN_PARTITIONS,
-        _drain_scope,
-    )
-
-    key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(key)
-    with _drain_scope(spark):
-        with _drain_scope(spark):
-            assert spark.conf.get(key) == str(STREAM_DRAIN_PARTITIONS)
-        assert spark.conf.get(key) == str(STREAM_DRAIN_PARTITIONS)
-    assert spark.conf.get(key) == saved
+        done.set()
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+        clear()
+    assert not errors, errors
+    assert seen == {mine}
+    assert state_partitions and set(state_partitions) == {W.STREAM_DRAIN_PARTITIONS}
 
 
 def test_streaming_pit_enrich_matches_batch_across_shards(spark, tmp_path):
