@@ -33,7 +33,6 @@ Scale posture (100 TB):
 
 from __future__ import annotations
 
-import threading
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
@@ -46,7 +45,7 @@ from mini_hadoop_spark.functions.text import (
 )
 from mini_hadoop_spark.functions.partitioning import spread_table
 from mini_hadoop_spark.functions.vectors import cosine, dot
-from mini_hadoop_spark.session import build_once, release
+from mini_hadoop_spark.session import build_once, clone_session, rebind, release
 from mini_hadoop_spark.sources.catalog import load_table
 
 # Near-dup output threshold: sf0.01 has 25 planted near-dup pairs with
@@ -1557,50 +1556,32 @@ def connected_components(
       groupBy+join passes over the shrinking edge set.  Right for
       long-chain / high-diameter graphs where HashMin's per-hop
       propagation would need hundreds of keyed shuffles.
+
+    The loop runs in a session clone with shuffle partitions sized to
+    the edge count, so the caller's conf is never written; the result
+    is rebound to the caller's session.
     """
-    if algorithm == "two-phase":
-        return _with_adaptive_shuffle(edges, _cc_two_phase, src, dst, max_iter)
-    if algorithm != "hashmin":
+    loops = {"hashmin": _cc_hashmin, "two-phase": _cc_two_phase}
+    if algorithm not in loops:
         raise ValueError(f"unknown CC algorithm {algorithm!r}; expected 'hashmin' or 'two-phase'")
-    return _with_adaptive_shuffle(edges, _cc_hashmin, src, dst, max_iter)
+    spark = edges.sparkSession
+    n_edges = edges.count()  # pair inputs are memoized/checkpointed; cheap
+    caller_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    target = max(1, min(caller_partitions, n_edges // _CC_EDGES_PER_PARTITION + 1))
+    loop = clone_session(spark, target)
+    labels = loops[algorithm](rebind(edges, loop), src, dst, max_iter)
+    return rebind(labels, spark)
 
 
-# One shuffle partition per this many edges, clamped to the session
-# setting.  Near-dup graphs are FILTERED pair sets — often thousands of
-# rows against a session conf sized for full-table shuffles — and the
+# One shuffle partition per this many edges, clamped to the caller's
+# setting: the one place the loop session's partitions are chosen.
+# Near-dup graphs are FILTERED pair sets — often thousands of rows
+# against a session conf sized for full-table shuffles — and the
 # iterative loop pays per-task scheduling overhead EVERY hop, so sizing
 # the loop's shuffles to the graph (measured 2-3x on the small end)
 # matters more here than anywhere else.  A billion-edge graph hits the
-# session clamp and behaves exactly as before.
+# caller's clamp.
 _CC_EDGES_PER_PARTITION = 200_000
-
-#: serializes the conf save/set/restore below (DESIGN lesson 41): two
-#: concurrent CC builds interleaving restores would leak a clamped
-#: value into the session and distort every later plan.  The lock makes
-#: any caller safe; bench additionally keeps the label builds
-#: sequential so the lock is never contended in the measured path.
-_adaptive_shuffle_lock = threading.Lock()
-
-
-def _with_adaptive_shuffle(edges: DataFrame, fn, src: str, dst: str, max_iter: int) -> DataFrame:
-    """Run a CC loop with shuffle partitions sized to the edge count.
-
-    The conf is session-global, so it is set only for the duration of
-    the loop (every action inside — witness aggs, the eager final
-    checkpoint — plans under the scaled setting), restored in a
-    finally, and the whole scope is serialized by
-    ``_adaptive_shuffle_lock`` (see the note above) so concurrent
-    callers cannot interleave restores."""
-    spark = edges.sparkSession
-    n_edges = edges.count()  # pair inputs are memoized/checkpointed; cheap
-    with _adaptive_shuffle_lock:
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        target = max(1, min(int(prev), n_edges // _CC_EDGES_PER_PARTITION + 1))
-        spark.conf.set("spark.sql.shuffle.partitions", str(target))
-        try:
-            return fn(edges, src, dst, max_iter)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def _cc_hashmin(edges: DataFrame, src: str, dst: str, max_iter: int) -> DataFrame:

@@ -1906,16 +1906,20 @@ PIT_INTERVAL_CTES = """v AS (
   FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
 )"""
 
+#: the PIT match of fact f to the version v valid at its ship date, for
+#: the same two oracles.  The current version's NULL valid_to reads as
+#: 'infinity': a plain range condition, which DuckDB joins fast.
+PIT_INTERVAL_MATCH = """f.custkey = v.custkey
+   AND v.valid_from <= f.ship_ts
+   AND f.ship_ts < coalesce(v.valid_to, 'infinity'::TIMESTAMP)"""
+
 
 PIT_SCD2_SQL = f"""
 WITH {PIT_INTERVAL_CTES}, m AS (
   SELECT f.custkey, f.rev, v.version,
          CASE WHEN v.version IS NULL THEN NULL
               ELSE v.valid_to IS NULL END AS is_current
-  FROM f LEFT JOIN v
-    ON f.custkey = v.custkey
-   AND v.valid_from <= f.ship_ts
-   AND (f.ship_ts < v.valid_to OR v.valid_to IS NULL)
+  FROM f LEFT JOIN v ON {PIT_INTERVAL_MATCH}
 )
 SELECT CASE WHEN version IS NULL THEN 'none'
             WHEN version > {PIT_VERSION_CAP} THEN '{PIT_VERSION_CAP + 1}+'

@@ -78,6 +78,31 @@ def get_spark(app_name: str = "mini_hadoop_spark", cpus: int | None = None) -> S
     return spark
 
 
+def clone_session(spark: SparkSession, shuffle_partitions: int) -> SparkSession:
+    """A clone of ``spark`` with the caller's runtime confs (UTC,
+    nanosAsLong, Arrow, ...) carried over and shuffle partitions set to
+    ``shuffle_partitions``.  The caller's own conf is never written, so
+    concurrent clones and queries need no lock."""
+    clone = spark.newSession()
+    for key, value in spark.conf.getAll.items():
+        if spark.conf.isModifiable(key):
+            clone.conf.set(key, value)
+    clone.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    return clone
+
+
+def rebind(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s logical plan as a frame of ``spark``: every plan built on
+    it is analyzed and planned under ``spark``'s confs.  A checkpoint
+    stays a ``LogicalRDD`` top node, so ``release`` still frees it.
+
+    ``Dataset.ofRows`` is ``private[sql]`` and reached over py4j; the
+    package already depends on ``_jsparkSession`` and the status store,
+    so Spark Connect is out of scope."""
+    jdataset = spark.sparkContext._jvm.org.apache.spark.sql.classic.Dataset
+    return DataFrame(jdataset.ofRows(spark._jsparkSession, df._jdf.logicalPlan()), spark)
+
+
 # Build-once artifacts (indexes, checkpointed pair graphs, drained
 # streams, trained models, table plans) keyed on (applicationId,
 # normalized sf_dir, name): a fresh session or another corpus never sees

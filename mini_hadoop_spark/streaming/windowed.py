@@ -39,7 +39,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from mini_hadoop_spark.session import build_once, release
+from mini_hadoop_spark.session import build_once, clone_session, release
 
 EVENTS_STREAM_SCHEMA = StructType(
     [
@@ -129,19 +129,6 @@ def run_stream_to_memory(
 STREAM_DRAIN_PARTITIONS = 4
 
 
-def _drain_session(spark: SparkSession) -> SparkSession:
-    """A clone of ``spark`` to start one drain's stream in: the caller's
-    runtime confs (UTC, nanosAsLong, ...) carried over, shuffle
-    partitions set to STREAM_DRAIN_PARTITIONS.  The caller's own conf is
-    never written, so concurrent drains and queries need no lock."""
-    clone = spark.newSession()
-    for key, value in spark.conf.getAll.items():
-        if spark.conf.isModifiable(key):
-            clone.conf.set(key, value)
-    clone.conf.set("spark.sql.shuffle.partitions", str(STREAM_DRAIN_PARTITIONS))
-    return clone
-
-
 def _link_or_copy(src: str, dst: str) -> None:
     try:
         os.link(src, dst)
@@ -227,7 +214,7 @@ def streaming_hourly_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         import uuid
 
         table = f"stream_hourly_{uuid.uuid4().hex[:8]}"
-        drain = _drain_session(spark)
+        drain = clone_session(spark, STREAM_DRAIN_PARTITIONS)
         with _staged_file(sf_dir, "events", "stream_hourly_") as stage:
             run_stream_to_memory(windowed_event_counts(read_events_stream(drain, stage)), table)
         # the memory sink's view lives in the session that started it
@@ -257,7 +244,7 @@ def streaming_session_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         from mini_hadoop_spark.streaming.stateful import streaming_sessionization
 
         table = f"stream_session_{uuid.uuid4().hex[:8]}"
-        drain = _drain_session(spark)
+        drain = clone_session(spark, STREAM_DRAIN_PARTITIONS)
         with _staged_file(sf_dir, "events", "stream_session_") as stage:
             run_stream_to_memory(
                 streaming_sessionization(read_events_stream(drain, stage)), table
@@ -303,7 +290,9 @@ def streaming_dedup_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             _stage_parquet(src, docs_dir)
             index_dir = os.path.join(root, "index")
             ckpt_dir = os.path.join(root, f"ckpt_{uuid.uuid4().hex[:8]}")
-            run_incremental_dedup_index(_drain_session(spark), docs_dir, index_dir, ckpt_dir)
+            run_incremental_dedup_index(
+                clone_session(spark, STREAM_DRAIN_PARTITIONS), docs_dir, index_dir, ckpt_dir
+            )
             # materialize before the staging tree is removed
             return (
                 read_index(spark, index_dir)
@@ -366,7 +355,7 @@ def streaming_contamination_drain(spark: SparkSession, sf_dir: str) -> DataFrame
             report_dir = os.path.join(root, "report")
             ckpt_dir = os.path.join(root, f"ckpt_{uuid.uuid4().hex[:8]}")
             run_streaming_contamination(
-                _drain_session(spark), docs_dir, eval_sh, report_dir, ckpt_dir
+                clone_session(spark, STREAM_DRAIN_PARTITIONS), docs_dir, eval_sh, report_dir, ckpt_dir
             )
             return spark.read.parquet(report_dir).localCheckpoint(eager=True)
         finally:
@@ -410,7 +399,7 @@ def streaming_classifier_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             report_dir = os.path.join(root, "report")
             ckpt_dir = os.path.join(root, f"ckpt_{uuid.uuid4().hex[:8]}")
             run_streaming_classifier_scores(
-                _drain_session(spark), docs_dir, w, report_dir, ckpt_dir
+                clone_session(spark, STREAM_DRAIN_PARTITIONS), docs_dir, w, report_dir, ckpt_dir
             )
             return spark.read.parquet(report_dir).localCheckpoint(eager=True)
         finally:
@@ -462,7 +451,8 @@ def streaming_pit_enrich_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
             report_dir = os.path.join(root, "report")
             ckpt_dir = os.path.join(root, f"ckpt_{uuid.uuid4().hex[:8]}")
             run_streaming_pit_enrich(
-                _drain_session(spark), facts_dir, order_keys, versions, report_dir, ckpt_dir
+                clone_session(spark, STREAM_DRAIN_PARTITIONS),
+                facts_dir, order_keys, versions, report_dir, ckpt_dir,
             )
             return spark.read.parquet(report_dir).localCheckpoint(eager=True)
         finally:
@@ -474,10 +464,11 @@ def streaming_pit_enrich_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _streaming_pit_sql() -> str:
     """Per-fact interval-join oracle — composes the SAME v/f CTEs as
     the batch report oracle (operators/relational_ext.py::
-    PIT_INTERVAL_CTES), so the drain and the batch query stay
-    bit-in-sync by construction; the drain casts the exact DECIMAL
-    revenue to double PER FACT (the batch aggregate casts the sum)."""
-    from mini_hadoop_spark.operators.relational_ext import PIT_INTERVAL_CTES
+    PIT_INTERVAL_CTES, PIT_INTERVAL_MATCH), so the drain and the batch
+    query stay bit-in-sync by construction; the drain casts the exact
+    DECIMAL revenue to double PER FACT (the batch aggregate casts the
+    sum)."""
+    from mini_hadoop_spark.operators.relational_ext import PIT_INTERVAL_CTES, PIT_INTERVAL_MATCH
 
     return f"""
 WITH {PIT_INTERVAL_CTES}
@@ -487,10 +478,7 @@ SELECT f.orderkey, f.linenumber, f.custkey,
        CASE WHEN v.version IS NULL THEN NULL
             ELSE v.valid_to IS NULL END AS is_current,
        CAST(f.rev AS DOUBLE) AS rev
-FROM f LEFT JOIN v
-  ON f.custkey = v.custkey
- AND v.valid_from <= f.ship_ts
- AND (f.ship_ts < v.valid_to OR v.valid_to IS NULL)
+FROM f LEFT JOIN v ON {PIT_INTERVAL_MATCH}
 """
 
 
@@ -517,7 +505,7 @@ def _outer_join_drained(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         table = f"stream_ojoin_{uuid.uuid4().hex[:8]}"
-        drain = _drain_session(spark)
+        drain = clone_session(spark, STREAM_DRAIN_PARTITIONS)
         with _staged_file(sf_dir, "events", "stream_ojoin_") as stage:
             run_stream_to_memory(
                 clicks_with_errors_outer(read_events_stream(drain, stage)),
@@ -559,7 +547,7 @@ def streaming_join_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
     by construction, and the independent inner-join oracle still gates
     it.  A stream-stream join instantiates FOUR state stores per
     shuffle partition per micro-batch, so the shared run starts in a
-    _drain_session clone."""
+    ``clone_session`` clone."""
     return _format_join_result(
         _outer_join_drained(spark, sf_dir).filter(F.col("error_id").isNotNull())
     )
@@ -584,7 +572,7 @@ def streaming_enrich_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         from mini_hadoop_spark.streaming.joins import stream_static_enrich
 
         table = f"stream_enrich_{uuid.uuid4().hex[:8]}"
-        drain = _drain_session(spark)
+        drain = clone_session(spark, STREAM_DRAIN_PARTITIONS)
         with _staged_file(sf_dir, "events", "stream_enrich_") as stage:
             dim = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
             enriched = stream_static_enrich(
@@ -662,7 +650,7 @@ def _ivf_stream_drained(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Da
             index_dir = os.path.join(root, "index")
             ckpt_dir = os.path.join(root, f"ckpt_{uuid.uuid4().hex[:8]}")
             run_incremental_ivf_index(
-                _drain_session(spark), emb_dir, centroids, index_dir, ckpt_dir
+                clone_session(spark, STREAM_DRAIN_PARTITIONS), emb_dir, centroids, index_dir, ckpt_dir
             )
             # materialize each snapshot before the staging tree is removed
             pre = read_ivf_index(spark, index_dir).localCheckpoint(eager=True)

@@ -604,6 +604,67 @@ def test_connected_components_keeps_only_its_result_checkpoint(spark, algorithm)
     assert {r.label for r in labels.collect()} == {1}
 
 
+def test_cc_runs_in_a_clone_and_never_writes_the_callers_conf(spark):
+    """The two near-dup label sets built concurrently each run their CC
+    loop in a clone of the caller's session: the caller's shuffle-
+    partition conf reads its own value throughout, the labels equal a
+    single-threaded build, and the loop ran with graph-sized partitions."""
+    import threading
+    import time
+
+    from mini_hadoop_spark.operators import dedup
+    from mini_hadoop_spark.session import clear
+
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    mine = str(spark.sparkContext.defaultParallelism + 2)
+    methods = ("jaccard", "minhash")
+    seen, errors, done = set(), [], threading.Event()
+    got = {}
+
+    def poll():
+        while not done.is_set():
+            seen.add(spark.conf.get(key))
+            time.sleep(0.002)
+
+    def build(method):
+        try:
+            got[method] = dedup.near_dup_labels(spark, SF_DIR, method)
+        except Exception as exc:  # noqa: BLE001 — surfaced by the assert below
+            errors.append(exc)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    spark.conf.set(key, mine)
+    try:
+        clear()
+        single = {m: rows(dedup.near_dup_labels(spark, SF_DIR, m)) for m in methods}
+        clear()
+        poller = threading.Thread(target=poll)
+        poller.start()
+        builds = [threading.Thread(target=build, args=(m,)) for m in methods]
+        for t in builds:
+            t.start()
+        for t in builds:
+            t.join(timeout=600)
+        done.set()
+        poller.join(timeout=10)
+        assert not any(t.is_alive() for t in (*builds, poller))
+        assert not errors, errors
+        assert seen == {mine}
+        for m in methods:
+            assert rows(got[m]) == single[m]
+            n_edges = dedup.near_dup_pairs(spark, SF_DIR, m).count()
+            target = max(1, min(int(mine), n_edges // dedup._CC_EDGES_PER_PARTITION + 1))
+            assert target < int(mine)
+            assert got[m].rdd.getNumPartitions() == target
+    finally:
+        done.set()
+        spark.conf.set(key, saved)
+        clear()
+
+
 def test_two_phase_cc_converges_where_hashmin_cannot(spark):
     """A 60-vertex chain has diameter 59: HashMin needs ~59 propagation
     rounds and must raise at max_iter=12, while the two-phase large-star/

@@ -13,8 +13,10 @@ import pytest
 from mini_hadoop_spark.session import (
     build_once,
     clear,
+    clone_session,
     default_driver_memory,
     physical_memory_bytes,
+    rebind,
     release,
 )
 from tests.conftest import SF_DIR, checkpoint_rdd_id, persistent_rdd_ids
@@ -70,6 +72,32 @@ def test_release_frees_only_the_top_checkpoint(spark):
     release(ckpt.select((ckpt.id + 1).alias("x")))
     assert rdd_id in persistent_rdd_ids(spark)
     release(ckpt)
+    assert rdd_id not in persistent_rdd_ids(spark)
+
+
+def test_rebind_plans_under_the_target_session_and_keeps_checkpoints(spark):
+    """A grouped frame rebound into a 1-partition clone plans 1 shuffle
+    partition while its own session's conf is unchanged; a checkpoint
+    rebound back keeps its LogicalRDD top node, so release() frees it.
+    AQE is off in both sessions so coalescing cannot hide the count."""
+    key = "spark.sql.shuffle.partitions"
+    caller = clone_session(spark, 3)
+    caller.conf.set("spark.sql.adaptive.enabled", "false")
+    grouped = caller.range(100).selectExpr("id % 7 AS k").groupBy("k").count()
+    try:
+        rebound = rebind(grouped, clone_session(caller, 1))
+    except Exception as exc:  # noqa: BLE001 — the message names the dependency
+        pytest.fail(
+            "session.rebind calls org.apache.spark.sql.classic.Dataset.ofRows "
+            f"over py4j, which this PySpark no longer provides: {exc}"
+        )
+    assert rebound.rdd.getNumPartitions() == 1
+    assert grouped.rdd.getNumPartitions() == 3
+    assert caller.conf.get(key) == "3"
+    back = rebind(rebound.localCheckpoint(eager=True), caller)
+    rdd_id = checkpoint_rdd_id(back)
+    assert sorted(tuple(r) for r in back.collect()) == sorted(tuple(r) for r in grouped.collect())
+    release(back)
     assert rdd_id not in persistent_rdd_ids(spark)
 
 

@@ -874,7 +874,7 @@ def test_drains_run_in_a_clone_and_never_write_the_callers_conf(spark, monkeypat
     import threading
     import time
 
-    from mini_hadoop_spark.session import clear
+    from mini_hadoop_spark.session import clear, clone_session
     from mini_hadoop_spark.streaming import windowed as W
 
     key = "spark.sql.shuffle.partitions"
@@ -908,7 +908,7 @@ def test_drains_run_in_a_clone_and_never_write_the_callers_conf(spark, monkeypat
     spark.conf.set(key, mine)
     spark.conf.set(runtime_key, "4321")
     try:
-        assert W._drain_session(spark).conf.get(runtime_key) == "4321"
+        assert clone_session(spark, W.STREAM_DRAIN_PARTITIONS).conf.get(runtime_key) == "4321"
         clear()
         poller = threading.Thread(target=poll)
         poller.start()
