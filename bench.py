@@ -21,6 +21,8 @@ import re
 import sys
 import time
 
+from perfbench import speed, stats
+
 
 def _sf_from_dir(sf_dir: str) -> float:
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -35,6 +37,24 @@ def _loadavg() -> list[float]:
         return [round(x, 2) for x in os.getloadavg()]
     except OSError:  # pragma: no cover — non-POSIX fallback
         return []
+
+
+def host_speed_fields(probes: list[float], value: float, value_cold_total: float) -> dict:
+    """The run's host-speed keys: the probes' lower quartile, the factor
+    taking this run's times to the reference speed (``perfbench.speed``)
+    and ``value``/``value_cold_total`` scaled by it, so runs taken in a
+    slow spell of the host compare with runs outside one.  No probes
+    (nothing was timed) scale by 1."""
+    factor = speed.scale(probes) if probes else 1.0
+    return {
+        "host_speed": {
+            "probe_lq_s": round(stats.percentile(probes, 25), 6) if probes else None,
+            "factor": round(factor, 4),
+            "n_probes": len(probes),
+        },
+        "value_scaled": round(value * factor, 4),
+        "value_cold_total_scaled": round(value_cold_total * factor, 4),
+    }
 
 
 def main() -> int:
@@ -89,8 +109,11 @@ def main() -> int:
             .agg(F.sum("w").alias("s"))
             .write.format("noop").mode("overwrite").save()
         )
-        # pre-fork the Python worker pool: the first mapInPandas query
-        # otherwise pays ~0.1s x n_cores of daemon spawn inside its timing
+        # pre-fork the Python worker pool: a session's first mapInPandas
+        # stage otherwise carries the daemon start, a fork and a pandas/
+        # pyarrow import per worker and the JVM's Arrow setup inside its
+        # timing (3.3-7.5 s for 4 partitions on a 4-core host, against
+        # 0.15-0.4 s on reused workers)
         n = spark.sparkContext.defaultParallelism
         (
             spark.range(0, n, 1, n)
@@ -264,11 +287,15 @@ def main() -> int:
     timings: dict[str, float] = {}
     failures: dict[str, str] = {}
     pass_loadavg: dict[str, list[float]] = {}
+    # the host's speed, probed before every timed query and outside its
+    # timing: the same probe perfbench scales its times by
+    probes: list[float] = []
     for pass_no in (1, 2):
         pass_loadavg[f"pass{pass_no}_start"] = _loadavg()
         for name, fn in sorted(queries.items()):
             if name in failures:
                 continue
+            probes.append(speed.probe(spark.sparkContext._jvm))
             t0 = time.perf_counter()
             try:
                 df = fn(spark, sf_dir)
@@ -332,6 +359,7 @@ def main() -> int:
         "loadavg_before": loadavg_before,
         "loadavg_after": _loadavg(),
     }
+    out.update(host_speed_fields(probes, total, out["value_cold_total"]))
     if failures:
         out["failures"] = failures
     rc_emit = emit_result_line(out)

@@ -16,11 +16,17 @@ import threading
 from typing import Callable
 
 from py4j.protocol import Py4JError
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 #: default driver heap as a share of physical RAM: the rest is left to the
 #: JVM's off-heap use, the Python workers and the OS page cache
 DRIVER_MEMORY_SHARE = 0.55
+
+DAEMON_MODULE_KEY = "spark.python.daemon.module"
+PYTHONPATH_KEY = "spark.executorEnv.PYTHONPATH"
+#: the directory the workers import ``mini_hadoop_spark`` from
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def physical_memory_bytes() -> int:
@@ -41,21 +47,27 @@ def get_spark(app_name: str = "mini_hadoop_spark", cpus: int | None = None) -> S
     ``default_driver_memory()``).  Shuffle partitions match core count —
     the right setting for local mode; on a real cluster this would be
     ~2-3x total cores and AQE coalesces down.
+
+    Python workers fork from ``worker_daemon`` unless the caller's conf
+    (spark-defaults.conf, submit args) names a daemon module of its own;
+    the executors' ``PYTHONPATH`` gets this package's parent directory
+    appended to the caller's, so the workers import the daemon whatever
+    the driver's working directory.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory())
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+    confs = {
+        "spark.master": f"local[{cpus}]",
+        "spark.app.name": app_name,
+        "spark.sql.shuffle.partitions": str(cpus),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
         # Whole-stage-codegen compiled-class cache (default 100 entries).
         # This application plans ~200 distinct queries x ~8 codegen
         # stages each, so at the default size every generated class is
@@ -68,12 +80,24 @@ def get_spark(app_name: str = "mini_hadoop_spark", cpus: int | None = None) -> S
         # application runs, not the data volume — any multi-query job
         # server wants the same setting.  ~Tens of KB per entry; a few
         # hundred MB ceiling.
-        .config("spark.sql.codegen.cache.maxEntries", "5000")
+        "spark.sql.codegen.cache.maxEntries": "5000",
         # nanosAsLong is NOT set here: the catalog probes each file's
         # actual timestamp encoding and flips the conf only when a nanos
         # column is really present (sources/catalog.py).
-    )
-    spark = builder.getOrCreate()
+    }
+    # The JVM starts from these confs (the heap is fixed at launch) before
+    # the builder runs: only a running JVM shows the caller's confs from
+    # spark-defaults.conf and the submit args, which the builder's would
+    # otherwise replace.
+    SparkContext._ensure_initialized(conf=SparkConf(loadDefaults=False).setAll(confs.items()))
+    caller = SparkConf()
+    if not caller.contains(DAEMON_MODULE_KEY):
+        confs[DAEMON_MODULE_KEY] = "mini_hadoop_spark.worker_daemon"
+    paths = [p for p in caller.get(PYTHONPATH_KEY, "").split(os.pathsep) if p]
+    if _PACKAGE_PARENT not in paths:
+        paths.append(_PACKAGE_PARENT)
+    confs[PYTHONPATH_KEY] = os.pathsep.join(paths)
+    spark = SparkSession.builder.config(map=confs).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 

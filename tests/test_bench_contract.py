@@ -48,3 +48,30 @@ def test_emit_infinity_fails_rc2():
     buf = io.StringIO()
     assert bench.emit_result_line(out, stream=buf) == 2
     assert buf.getvalue() == ""
+
+
+def test_host_speed_fields_scale_value_and_cold_total():
+    """The host-speed keys scale both totals by the perfbench factor
+    (reference probe time over the probes' lower quartile) and emit."""
+    from perfbench import speed
+
+    probes = [speed.PROBE_REF_S * 2] * 3 + [speed.PROBE_REF_S * 4]
+    fields = bench.host_speed_fields(probes, 10.0, 30.0)
+    assert fields["host_speed"] == {
+        "probe_lq_s": round(speed.PROBE_REF_S * 2, 6),
+        "factor": 0.5,
+        "n_probes": 4,
+    }
+    assert fields["value_scaled"] == 5.0
+    assert fields["value_cold_total_scaled"] == 15.0
+    out = {**_ok_payload(), **fields}
+    buf = io.StringIO()
+    assert bench.emit_result_line(out, stream=buf) == 0
+    assert json.loads(buf.getvalue())["host_speed"]["n_probes"] == 4
+
+
+def test_host_speed_fields_without_probes_scale_by_one():
+    fields = bench.host_speed_fields([], 10.0, 30.0)
+    assert fields["host_speed"]["factor"] == 1.0
+    assert fields["value_scaled"] == 10.0
+    assert bench.emit_result_line({**_ok_payload(), **fields}, stream=io.StringIO()) == 0

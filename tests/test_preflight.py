@@ -47,6 +47,24 @@ def test_preflight_rejects_missing_oracle_query_symmetry(tmp_path):
     assert "ghost" in proc.stderr
 
 
+def test_preflight_rejects_broken_worker_daemon(tmp_path):
+    """Every Python task forks from the worker daemon module: a tree
+    whose daemon does not import is rejected even when the entry does."""
+    (tmp_path / "__spark_entry__.py").write_text(
+        "def queries():\n    return {'a': lambda s, d: None}\n"
+        "def oracle_sql():\n    return {'a': 'SELECT 1'}\n"
+        "def entry(spark):\n    return None\n"
+    )
+    pkg = tmp_path / "mini_hadoop_spark"
+    pkg.mkdir()
+    (pkg / "__init__.py").write_text("")
+    (pkg / "worker_daemon.py").write_text("def broken(:\n")
+    proc = _run(str(tmp_path))
+    assert proc.returncode == 1
+    assert "worker_daemon failed" in proc.stderr
+    assert "SyntaxError" in proc.stderr
+
+
 def test_hook_script_invokes_preflight():
     hook = REPO / ".githooks" / "pre-commit"
     assert hook.exists(), "committed pre-commit hook missing"

@@ -1,12 +1,15 @@
-"""Session sizing (the defaults derive from the host, not a fixed box)
-and the session-scoped build-once memo."""
+"""Session sizing (the defaults derive from the host, not a fixed box),
+the Python worker daemon and the session-scoped build-once memo."""
 
 from __future__ import annotations
 
 import os
+import subprocess
 import sys
+import textwrap
 import threading
 import time
+from pathlib import Path
 
 import pytest
 
@@ -27,6 +30,59 @@ def test_default_driver_heap_is_below_physical_ram():
     assert heap.endswith("m")
     heap_bytes = int(heap[:-1]) * 1024 * 1024
     assert 0 < heap_bytes < physical_memory_bytes() * 0.56
+
+
+def test_worker_reads_no_zip_directory_per_task(spark):
+    """Every task's setup calls ``importlib.invalidate_caches()``; before
+    CPython 3.13 that re-reads each zip archive's directory (pyspark.zip,
+    py4j) unless the worker forked from ``worker_daemon``."""
+
+    def zip_reads_on_invalidate(_rows):
+        import importlib
+        import zipimport
+
+        reads = [0]
+        read_directory = zipimport._read_directory
+
+        def counted(archive):
+            reads[0] += 1
+            return read_directory(archive)
+
+        zipimport._read_directory = counted
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
+        yield reads[0], sum(p.endswith(".zip") for p in sys.path)
+
+    [(reads, zips)] = spark.sparkContext.parallelize([0], 1).mapPartitions(zip_reads_on_invalidate).collect()
+    assert zips >= 1
+    if sys.version_info < (3, 13):
+        assert reads == 0
+
+
+def test_workers_import_the_daemon_from_any_cwd(tmp_path):
+    """A driver started outside the repo, reaching the package only by a
+    ``sys.path`` insertion, still runs Python tasks: the workers import
+    the daemon module through the executors' PYTHONPATH."""
+    repo = Path(__file__).resolve().parent.parent
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {str(repo)!r})
+        from mini_hadoop_spark.session import get_spark
+        spark = get_spark("daemon-cwd", cpus=2)
+        print(spark.sparkContext.parallelize([1, 2], 2).map(lambda x: x + 1).collect())
+        spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k not in ("PYTHONPATH", "PYSPARK_SUBMIT_ARGS")}
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.strip().splitlines()[-1] == "[2, 3]"
 
 
 def test_clear_frees_checkpoint_blocks_of_every_artifact(spark):

@@ -15,7 +15,9 @@ Checks (fast — no Spark session, no data):
   2. ``queries()`` / ``oracle_sql()`` structural invariants: oracle keys
      are a subset of query keys, no empty SQL strings, every callable is
      callable, DRIVER_WINDOW (asserted at registry import) holds.
-  3. ``pytest --collect-only -q`` exits 0 — no test file is dead at
+  3. ``mini_hadoop_spark.worker_daemon`` imports: every Python task
+     forks from it, so a broken one fails them all.
+  4. ``pytest --collect-only -q`` exits 0 — no test file is dead at
      collection time.
 
 Wire-up (committed): ``.githooks/pre-commit`` runs this against a
@@ -62,6 +64,26 @@ def check_entry_import() -> list[str]:
     return errors
 
 
+def check_worker_daemon() -> list[str]:
+    """Imported in a subprocess whose path holds only the checked tree
+    and the interpreter's own, the way a worker imports it: nothing this
+    process already imported, and no other copy of the package, stands
+    in for the checked module."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    proc = subprocess.run(
+        [sys.executable, "-c", "import mini_hadoop_spark.worker_daemon"],
+        cwd=REPO,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    if proc.returncode != 0:
+        tail = "\n".join(proc.stderr.strip().splitlines()[-5:])
+        return [f"import mini_hadoop_spark.worker_daemon failed:\n{tail}"]
+    return []
+
+
 def check_pytest_collection() -> list[str]:
     proc = subprocess.run(
         [sys.executable, "-m", "pytest", "tests/", "--collect-only", "-q"],
@@ -77,7 +99,7 @@ def check_pytest_collection() -> list[str]:
 
 
 def main() -> int:
-    errors = check_entry_import()
+    errors = check_entry_import() + check_worker_daemon()
     # Collection is only meaningful if the package imports at all.
     if not errors:
         errors += check_pytest_collection()
@@ -86,7 +108,7 @@ def main() -> int:
         for e in errors:
             print(f"  - {e}", file=sys.stderr)
         return 1
-    print("preflight OK: entry imports, registry invariants hold, tests collect")
+    print("preflight OK: entry and worker daemon import, registry invariants hold, tests collect")
     return 0
 
 
